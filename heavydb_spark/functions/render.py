@@ -496,14 +496,14 @@ def _hex_sql(orient, axis):
     return fn
 
 
-def reg_hex_pixel_bin_xy_staged_sql(orient, valx, minx, maxx, valy, miny,
-                                    maxy, hexwidth, hexheight, offsetx,
-                                    offsety, imgwidth, imgheight,
-                                    prefix="__hx_"):
-    """Both hex-bin axes as STAGED SQL: returns (stages, x_sql, y_sql)
-    where `stages` is an ordered list of (name, sql) intermediate
-    definitions, each referencing only input columns and earlier names,
-    and x_sql / y_sql reference the staged names.
+def reg_hex_pixel_bin_xy_staged_sql(valx, minx, maxx, valy, miny, maxy,
+                                    hexwidth, hexheight, offsetx, offsety,
+                                    imgwidth, imgheight, prefix="__hx_"):
+    """Both horizontal hex-bin axes as STAGED SQL (_hex_bin pairs the
+    axes for the horizontal orientation only): returns (stages, x_sql,
+    y_sql) where `stages` is an ordered list of (name, sql)
+    intermediate definitions, each referencing only input columns and
+    earlier names, and x_sql / y_sql reference the staged names.
 
     Why (r14): the flat `_sql` twins re-inline every shared
     subexpression (text has no reference semantics), so one hex axis
@@ -521,7 +521,7 @@ def reg_hex_pixel_bin_xy_staged_sql(orient, valx, minx, maxx, valy, miny,
         stages.append((n, expr.s))
         return _E(n)
 
-    x, y = _hex_bin(_SqlB, orient, "xy", _E(valx), minx, maxx,
+    x, y = _hex_bin(_SqlB, "horiz", "xy", _E(valx), minx, maxx,
                     _E(valy), miny, maxy, hexwidth, hexheight,
                     _E(str(offsetx)), _E(str(offsety)),
                     imgwidth, imgheight, cse=cse)

@@ -2085,7 +2085,7 @@ _PB_RECT_X_SQL = _render.rect_pixel_bin_x_sql("__lon", -20.0, 20.0, 8.0, 3.0, 80
 _PB_RECT_Y_SQL = _render.rect_pixel_bin_y_sql("__lat", 20.0, 50.0, 8.0, 0.0, 600)
 _PB_HEX_STAGES, _PB_HEX_X_SQL, _PB_HEX_Y_SQL = (
     _render.reg_hex_pixel_bin_xy_staged_sql(
-        "horiz", "__lon", -20.0, 20.0, "__lat", 20.0, 50.0,
+        "__lon", -20.0, 20.0, "__lat", 20.0, 50.0,
         10.0 * _render.SQRT3 / 2.0, 10.0, 0.0, 0.0, 800, 600,
     )
 )

@@ -1587,3 +1587,243 @@ def test_ctas_update_comparator_pins(spark, engine):
     finally:
         for t in ("cu_pins", "cu_pins_with", "cu_tmp"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+# One example per statement kind and its expected (kind, read_only),
+# classified in pure Python (no Spark job). The pairs whose relative
+# order the dispatch encodes sit next to each other.
+_CLASSIFY_CASES = [
+    ("SELECT 1", "query", True),
+    ("WITH c AS (SELECT 1) SELECT * FROM c", "query", True),
+    ("VALUES (1), (2)", "query", True),
+    ("TABLE lineitem", "query", True),
+    ("SELECT 'DELETE FROM t' AS s", "query", True),
+    ("WITH c AS (SELECT 1 AS x) INSERT INTO t SELECT x FROM c",
+     "query", False),
+    ("WITH c AS (SELECT 1 AS x) DELETE FROM t", "query", False),
+    ("EXPLAIN SELECT 1", "explain", True),
+    ("EXPLAIN CALCITE SELECT 1", "explain", True),
+    ("UPDATE t SET a = 1 WHERE b = 2", "update", False),
+    ("DELETE FROM t WHERE a = 1", "delete", False),
+    ("CREATE TEMPORARY TABLE t AS SELECT 1 AS a", "create_temp_as", False),
+    ("CREATE TABLE t (a INT) WITH (fragment_size=10)", "create_with", False),
+    ("CREATE TABLE t (a INT, b TIME)", "create_table", False),
+    ("CREATE TEMPORARY TABLE t (a INT)", "create_table", False),
+    ("CREATE TABLE t AS SELECT 1 AS a", "create_table_native", False),
+    ("CREATE OR REPLACE TABLE t (a INT)", "create_table_native", False),
+    ("SHOW CREATE TABLE t", "show_create", True),
+    ("SHOW TABLE DETAILS t", "show_details", True),
+    ("OPTIMIZE TABLE t", "optimize", False),
+    ("VALIDATE", "validate", True),
+    ("CREATE MODEL m OF TYPE LINEAR_REG AS SELECT y, x FROM t",
+     "create_model", False),
+    ("DROP MODEL m", "drop_model", False),
+    ("EVALUATE MODEL m", "evaluate_model", True),
+    ("SHOW MODEL FEATURE DETAILS m", "show_model_feature", True),
+    ("SHOW MODEL DETAILS m", "show_model_details", True),
+    ("SHOW TABLE FUNCTIONS", "show_table_functions", True),
+    ("SHOW FUNCTIONS", "show_functions", True),
+    ("SHOW SUPPORTED DATA SOURCES", "show_data_sources", True),
+    ("GRANT SELECT ON TABLE t TO u", "access_control", False),
+    ("CREATE USER u", "access_control", False),
+    ("SHOW DISK CACHE USAGE", "access_control", True),
+    ("CREATE SERVER s FOREIGN DATA WRAPPER delimited_file",
+     "create_server", False),
+    ("DROP SERVER s", "drop_server", False),
+    ("ALTER SERVER s RENAME TO s2", "alter_server", False),
+    ("SHOW FOREIGN SERVERS", "show_servers", True),
+    ("SHOW CREATE SERVER s", "show_create_server", True),
+    ("CREATE FOREIGN TABLE f (a INT) SERVER s WITH (file_path='f.csv')",
+     "create_foreign", False),
+    ("DROP FOREIGN TABLE f", "drop_foreign", False),
+    ("REFRESH FOREIGN TABLES f", "refresh_foreign", False),
+    ("SHOW QUERIES", "show_queries", True),
+    ("SHOW USER SESSIONS", "show_sessions", True),
+    ("SHOW USER DETAILS", "show_user_details", True),
+    ("SHOW ROLES", "show_roles", True),
+    ("SHOW POLICIES", "show_policies", True),
+    ("KILL QUERY 'q1'", "kill_query", False),
+    ("ALTER SYSTEM CLEAR CPU MEMORY", "alter_system_clear", False),
+    ("ALTER SYSTEM PAUSE EXECUTOR QUEUE", "alter_system_queue", False),
+    ("ALTER TABLE t ADD COLUMN c INT", "alter_table", False),
+    ("ALTER DATABASE d RENAME TO e", "alter_database_rename", False),
+    ("TRUNCATE TABLE t", "truncate", False),
+    ("COMMENT ON TABLE t IS 'x'", "comment", False),
+    ("ALTER SESSION SET RESULT_CACHE='on'", "alter_session", False),
+    ("CREATE DATAFRAME d (a INT) FROM 'd.csv'", "create_dataframe", False),
+    ("SHOW MODELS", "show_models", True),
+    ("RENAME TABLE a TO b", "rename_table", False),
+    ("COPY (SELECT 1) TO 'x.csv'", "copy_to", False),
+    ("COPY t FROM 'x.csv'", "copy_from", False),
+    ("DUMP TABLE t TO 'd'", "dump", False),
+    ("RESTORE TABLE t FROM 'd'", "restore", False),
+    ("DROP TABLE IF EXISTS t", "drop_table", False),
+    ("INSERT INTO t VALUES (1, 'a')", "insert_values", False),
+    ("INSERT INTO t (a) SELECT a FROM u", "insert_select", False),
+    ("SHOW TABLES", "native", True),
+    ("DESCRIBE t", "native", True),
+    ("DROP VIEW v", "native", False),
+    ("SET spark.sql.shuffle.partitions=4", "native", False),
+    # leading comments and hint blocks are skipped, not part of the head
+    ("-- c\nDELETE FROM t WHERE a = 2", "delete", False),
+    ("/* c */ UPDATE t SET b = 'z'", "update", False),
+    ("/*+ cpu_mode */ SELECT 1", "query", True),
+    ("  /* a */ -- b\n  select 1", "query", True),
+]
+
+
+@pytest.mark.parametrize("stmt, kind, read_only", _CLASSIFY_CASES)
+def test_classify_statement_kinds(stmt, kind, read_only):
+    from heavydb_spark.engine import _classify, _extract_query_hints
+
+    got_kind, m, got_ro = _classify(stmt)
+    assert (got_kind, got_ro) == (kind, read_only)
+    assert (m is None) == (kind in ("query", "native"))
+    if stmt.startswith("/*+"):
+        assert _extract_query_hints(stmt)[1] == {"cpu_mode": None}
+
+
+def test_classify_kind_table_is_consistent():
+    """Every kind a keyword registers has a pattern, every pattern-bound
+    kind is registered under some keyword, and every kind has a case."""
+    from heavydb_spark import engine as eng
+
+    registered = {k for _ro, kinds in eng._HEADS.values() for k in kinds}
+    assert registered == set(eng._KINDS)
+    assert {k for _s, k, _r in _CLASSIFY_CASES} >= set(eng._KINDS)
+
+
+def test_table_functions_expand_after_raw_text_kinds(engine, spark,
+                                                     monkeypatch):
+    """EXPLAIN, UPDATE, DELETE, CREATE TEMPORARY TABLE AS, CREATE TABLE
+    WITH, SHOW CREATE, SHOW TABLE DETAILS, OPTIMIZE and VALIDATE act on
+    the raw statement; every other kind sees it only after CURSOR and
+    no-argument table functions expand."""
+    from heavydb_spark.engine import Engine
+
+    seen = []
+    real = Engine._expand_cursor_table_functions
+    monkeypatch.setattr(Engine, "_expand_cursor_table_functions",
+                        lambda self, q: seen.append(q) or real(self, q))
+    for t in ("ord_t", "ord_w"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    try:
+        engine.sql("CREATE TABLE ord_t (a INT, b TEXT)")
+        engine.sql("INSERT INTO ord_t VALUES (1, 'x'), (2, 'y')")
+        for stmt in ("EXPLAIN SELECT a FROM ord_t",
+                     "UPDATE ord_t SET b = 'z'",
+                     "DELETE FROM ord_t WHERE a = 2",
+                     "CREATE TEMPORARY TABLE ord_tmp AS SELECT a FROM ord_t",
+                     "CREATE TABLE ord_w (a INT) WITH (fragment_size=10)",
+                     "SHOW CREATE TABLE ord_t",
+                     "SHOW TABLE DETAILS ord_t",
+                     "OPTIMIZE TABLE ord_t",
+                     "VALIDATE"):
+            seen.clear()
+            engine.sql(stmt)
+            assert stmt not in seen, stmt
+        for stmt in ("SELECT a FROM ord_t",
+                     "INSERT INTO ord_t VALUES (3, 'w')",
+                     "SHOW TABLE FUNCTIONS"):
+            seen.clear()
+            engine.sql(stmt)
+            assert seen[:1] == [stmt], stmt
+    finally:
+        spark.catalog.dropTempView("ord_tmp")
+        for t in ("ord_t", "ord_w"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+@pytest.mark.parametrize("stmt", [
+    "-- c\nDELETE FROM lc_t WHERE a = 2",
+    "/* c */ UPDATE lc_t SET b = 'z'",
+    "-- c\nSHOW CREATE TABLE lc_t",
+    "/* c */ CREATE TABLE lc_u (a TIME)",
+])
+def test_leading_comment_routes_like_bare_statement(engine, spark, stmt):
+    """A leading comment must not hide the statement's keyword: each of
+    these once missed its handler and fell through to spark.sql."""
+    for t in ("lc_t", "lc_u"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    engine.sql("CREATE TABLE lc_t (a INT, b TEXT)")
+    engine.sql("INSERT INTO lc_t VALUES (1, 'x'), (2, 'y')")
+    try:
+        out = engine.sql(stmt)
+        rows = sorted(tuple(r) for r in spark.table("lc_t").collect())
+        if "DELETE" in stmt:
+            assert rows == [(1, "x")]
+        elif "UPDATE" in stmt:
+            assert rows == [(1, "z"), (2, "z")]
+        elif "SHOW" in stmt:
+            assert out.columns == ["create_table_statement"]
+            assert out.first()[0].startswith("CREATE TABLE lc_t (")
+        else:
+            assert engine._time_cols("lc_u") == {"a"}
+            engine.sql("INSERT INTO lc_u VALUES ('01:00:00')")
+            assert spark.table("lc_u").first().a == 3600
+    finally:
+        for t in ("lc_t", "lc_u"):
+            engine.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_table_statement_keeps_result_cache(engine):
+    """`TABLE t` is a read-only query (sql_validate accepts it), so with
+    the result cache on it must neither drop cached results nor be
+    kept out of the cache itself."""
+    engine.sql("ALTER SESSION SET RESULT_CACHE='on'")
+    try:
+        q = "SELECT count(*) AS n FROM lineitem"
+        first = engine.sql(q)
+        table = engine.sql("TABLE nation")
+        assert engine.sql(q) is first
+        assert engine.sql("TABLE nation") is table
+    finally:
+        engine.sql("ALTER SESSION SET RESULT_CACHE='off'")
+
+
+def test_sql_classifies_each_statement_once(engine, spark, monkeypatch):
+    """Dispatch, the cache checks and the TIME registry all read one
+    classification per Engine.sql call."""
+    from heavydb_spark import engine as eng
+
+    calls = []
+    real = eng._classify
+    monkeypatch.setattr(
+        eng, "_classify", lambda q: calls.append(q) or real(q))
+    spark.sql("DROP TABLE IF EXISTS cls_once")
+    try:
+        for stmt in ("SELECT 1 AS x", "CREATE TABLE cls_once (a TIME)",
+                     "INSERT INTO cls_once VALUES ('00:00:05')",
+                     "DROP TABLE cls_once"):
+            calls.clear()
+            engine.sql(stmt)
+            assert calls == [stmt]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS cls_once")
+
+
+def test_dispatch_order_fallthroughs(engine, spark):
+    """An ALTER TABLE form _alter_table declines still runs natively,
+    and plain CREATE / INSERT VALUES / INSERT SELECT are rewritten and
+    then executed."""
+    for t in ("fo_t", "fo_u"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    try:
+        engine.sql("CREATE TABLE fo_t (a INT, b TEXT, c BOOLEAN)")
+        engine.sql("ALTER TABLE fo_t SET TBLPROPERTIES ('k' = 'v')")
+        props = {r.key: r.value for r in
+                 spark.sql("SHOW TBLPROPERTIES fo_t").collect()}
+        assert props.get("k") == "v"
+        engine.sql("INSERT INTO fo_t VALUES (1, 'x', 'true')")
+        engine.sql("CREATE TABLE fo_u (a INT, b TEXT, c BOOLEAN)")
+        engine.sql("INSERT INTO fo_u SELECT '2', b, c FROM fo_t")
+        assert tuple(spark.table("fo_u").first()) == (2, "x", True)
+    finally:
+        for t in ("fo_t", "fo_u"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_alter_system_queue_names_spark_scheduler(engine):
+    with pytest.raises(ValueError, match=r"\(fair-scheduler pools / "
+                                         r"spark\.scheduler\.\* conf\)"):
+        engine.sql("ALTER SYSTEM PAUSE EXECUTOR QUEUE")

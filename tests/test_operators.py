@@ -1677,6 +1677,32 @@ def test_render_hex_pixel_bins(spark):
     assert sp["p"] == (int(sp["x"] * 4) & 0x7FFF) | ((int(sp["y"] * 4) & 0x7FFF) << 16)
 
 
+def test_render_hex_staged_sql_matches_flat(spark):
+    """reg_hex_pixel_bin_xy_staged_sql (horizontal only; it takes no
+    orientation) chains its stages to the same values as the flat
+    horizontal SQL twins."""
+    from pyspark.sql import functions as F
+
+    from heavydb_spark.functions import render
+
+    args = (0.0, 100.0, 10.0 * render.SQRT3 / 2.0, 10.0, 0.0, 0.0, 100, 100)
+    head = ("px", 0.0, 100.0, "py")
+    stages, x_sql, y_sql = render.reg_hex_pixel_bin_xy_staged_sql(
+        *head, *args)
+    df = spark.createDataFrame(
+        [(x + 0.37, x * 0.7 + 0.91) for x in range(3, 97, 9)],
+        "px double, py double")
+    for name, sql in stages:
+        df = df.withColumn(name, F.expr(sql))
+    flat_x = render.reg_hex_horiz_pixel_bin_x_sql(*head, *args)
+    flat_y = render.reg_hex_horiz_pixel_bin_y_sql(*head, *args)
+    for r in df.select(
+        F.expr(x_sql).alias("x"), F.expr(y_sql).alias("y"),
+        F.expr(flat_x).alias("fx"), F.expr(flat_y).alias("fy"),
+    ).collect():
+        assert (r.x, r.y) == (r.fx, r.fy)
+
+
 def test_render_merc_view_functions(spark):
     """is_point[_size]_in_merc_view + convert_meters_to_merc_pixel_*
     (ExtensionFunctions.hpp:1060-1135): rect containment, radius
