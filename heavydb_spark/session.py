@@ -18,6 +18,27 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+# cgroup v2, then v1: the memory limit of the container we run in
+_CGROUP_MEMORY_LIMITS = ("/sys/fs/cgroup/memory.max",
+                         "/sys/fs/cgroup/memory/memory.limit_in_bytes")
+
+
+def _default_driver_memory() -> str:
+    """16g, or half of the memory we may use on a smaller host: a full
+    heap next to the Python workers must not exhaust the machine. That
+    memory is physical RAM, capped by a container's cgroup limit."""
+    usable = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                usable = min(usable, int(f.read()))  # "max" raises
+            break
+        except (OSError, ValueError):
+            continue
+    return f"{min(16 * 1024, usable // 2**21)}m"
+
+
 # Applied at build time (before JVM start) when we own the session.
 _BUILD_CONF = {
     # AQE: runtime re-planning — coalesce small shuffle partitions, convert
@@ -36,7 +57,8 @@ _BUILD_CONF = {
     # Arrow for any pandas-UDF path (the slow-path escape hatch).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                            or _default_driver_memory()),
 }
 
 # Runtime-settable conf (safe to apply to a session we did not build,
@@ -74,10 +96,12 @@ def spread_partition_count(spark: SparkSession) -> int:
     the data (guide §2.2), and this count follows it; locally both are
     the core count, so the plan is unchanged from the pinned form.
     """
-    return max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
+    cores = spark.sparkContext.defaultParallelism
+    try:
+        return max(
+            cores, int(spark.conf.get("spark.sql.shuffle.partitions", "200")))
+    except ValueError:  # a non-numeric value, e.g. some vendors' "auto"
+        return cores
 
 
 def get_spark(

@@ -12,6 +12,7 @@ Engine SQL surface on separate tables.
 
 from __future__ import annotations
 
+import threading
 from concurrent.futures import ThreadPoolExecutor
 
 from tests.conftest import SF_DIR, canonical
@@ -258,3 +259,87 @@ def test_result_recycler_evicted_entry_recomputes(engine, spark):
         engine.__class__._RESULT_CACHE_MAX = old_max
         engine.sql("ALTER SESSION SET RESULT_CACHE='off'")
         engine._invalidate_result_cache()
+
+
+# Engine.sql_arrow statements: seven small ones that take the static
+# one-partition profile, and one whose range() leaf (16 MB) is above the
+# broadcast threshold and keeps the default AQE plan.
+ARROW_SLICE = [
+    "SELECT l_returnflag, COUNT(*) AS n, SUM(l_quantity) AS qty "
+    "FROM lineitem GROUP BY l_returnflag",
+    "SELECT o_orderpriority, COUNT(*) AS n FROM orders "
+    "WHERE o_orderdate < DATEADD('day', 400, TIMESTAMP '1996-01-01 00:00:00') "
+    "GROUP BY o_orderpriority",
+    "SELECT c_nationkey, SAMPLE(n_name) AS nation, COUNT(*) AS n "
+    "FROM customer JOIN nation ON c_nationkey = n_nationkey "
+    "GROUP BY c_nationkey",
+    "SELECT l_returnflag, APPROX_MEDIAN(l_extendedprice) AS med "
+    "FROM lineitem GROUP BY l_returnflag",
+    "SELECT l_linenumber / 2 AS bucket, COUNT(*) AS n FROM lineitem "
+    "GROUP BY l_linenumber / 2",
+    "SELECT c_custkey, c_acctbal FROM customer "
+    "ORDER BY c_acctbal DESC, c_custkey LIMIT 10",
+    "SELECT r_name, COUNT(*) AS n FROM supplier "
+    "JOIN nation ON s_nationkey = n_nationkey "
+    "JOIN region ON n_regionkey = r_regionkey GROUP BY r_name",
+    "SELECT id % 7 AS k, COUNT(*) AS n FROM range(2000000) GROUP BY id % 7",
+]
+
+
+def test_sql_arrow_parallel_matches_sequential(engine, spark):
+    """8 threads in Engine.sql_arrow at once return the sequential
+    results and leave AQE and the shuffle partition count as they were
+    (the small profile's conf flip is held under the plan lock)."""
+    confs = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = [spark.conf.get(k) for k in confs]
+    assert [engine._small_input(engine.sql(t)._jdf.queryExecution())
+            for t in ARROW_SLICE] == [True] * 7 + [False]
+
+    def run(text):
+        return canonical([tuple(d.values())
+                          for d in engine.sql_arrow(text).to_pylist()])
+
+    sequential = [run(t) for t in ARROW_SLICE]
+    with ThreadPoolExecutor(max_workers=len(ARROW_SLICE)) as pool:
+        for _ in range(3):
+            concurrent = list(pool.map(run, ARROW_SLICE, timeout=300))
+            assert concurrent == sequential
+    assert [spark.conf.get(k) for k in confs] == before
+
+
+def test_alter_session_survives_concurrent_sql_arrow(engine, spark):
+    """ALTER SESSION SET spark.sql.shuffle.partitions, raced against
+    sql_arrow calls that flip and restore that conf, is never undone:
+    SET reads back each value written, and the last one stays. Engine.sql
+    runs both statements under the lock sql_arrow holds while its
+    profile is live."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key), spark.conf.get("spark.sql.adaptive.enabled")
+    small = ARROW_SLICE[:7]
+    readers_done = threading.Event()
+
+    def read(i):
+        for j in range(3):
+            engine.sql_arrow(small[(i + j) % len(small)])
+
+    def write():
+        seen = []
+        while not readers_done.is_set() or len(seen) < 20:
+            for value in ("5", "7"):
+                engine.sql(f"ALTER SESSION SET {key}={value}")
+                seen.append((value, engine.sql(f"SET {key}").first()[1]))
+        return seen
+
+    try:
+        with ThreadPoolExecutor(max_workers=5) as pool:
+            writer = pool.submit(write)
+            readers = [pool.submit(read, i) for i in range(4)]
+            for f in readers:
+                f.result(timeout=300)
+            readers_done.set()
+            seen = writer.result(timeout=300)
+        assert all(got == value for value, got in seen), seen
+        assert spark.conf.get(key) == "7"
+        assert spark.conf.get("spark.sql.adaptive.enabled") == before[1]
+    finally:
+        spark.conf.set(key, before[0])
