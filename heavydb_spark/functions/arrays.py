@@ -34,16 +34,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v.cast("double"),
-        )
-    )
-
-
 # SQL UDF forms (Spark 4 SQL scalar functions, stay JVM-side).
 _SQL_FUNCS = {
     "dot_product": """

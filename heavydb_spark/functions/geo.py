@@ -59,20 +59,6 @@ def st_dwithin(a: Column, b: Column, dist: float) -> Column:
     return st_distance(a, b) <= dist
 
 
-def st_contains_bbox(
-    xmin: Column, ymin: Column, xmax: Column, ymax: Column, p: Column
-) -> Column:
-    """Bounding-box containment — the pre-filter the reference's
-    bounding-box-intersect join hash table accelerates
-    (JoinHashTable/BoundingBoxIntersectJoinHashTable.h:29)."""
-    return (
-        (p["x"] >= xmin)
-        & (p["x"] <= xmax)
-        & (p["y"] >= ymin)
-        & (p["y"] <= ymax)
-    )
-
-
 # ---------------------------------------------------------------- polygons
 #
 # POLYGON = array<ring>, ring = array<struct<x double, y double>>; ring 0
@@ -608,14 +594,6 @@ def st_area_multipolygon(mp: Column) -> Column:
     return _fsum(F.transform(mp, st_area))
 
 
-def st_perimeter_multipolygon(mp: Column) -> Column:
-    return _fsum(F.transform(mp, st_perimeter))
-
-
-def st_length_multilinestring(mls: Column) -> Column:
-    return _fsum(F.transform(mls, st_length))
-
-
 def st_centroid_multipolygon(mp: Column) -> Column:
     """Area-weighted centroid across components: Σ(area_i · c_i) / Σarea_i.
     NULL for a degenerate (zero-total-area or empty) multipolygon —
@@ -1039,14 +1017,6 @@ def tm_to_wgs84(easting: Column, northing: Column, srid: int) -> Column:
         _EPSG_TM[srid],
     )
     return F.struct(lon.alias("x"), lat.alias("y"))
-
-
-def tm_to_wgs84_sql(e_expr: str, n_expr: str, srid: int) -> tuple[str, str]:
-    """ANSI-SQL text of `tm_to_wgs84` (for DuckDB oracles)."""
-    lon, lat = _tm_inverse_formula(
-        _SqlOps(), _SqlExpr(e_expr), _SqlExpr(n_expr), _EPSG_TM[srid]
-    )
-    return lon.s, lat.s
 
 
 def utm_to_wgs84(easting: Column, northing: Column, zone: int) -> Column:
@@ -2044,22 +2014,6 @@ def _wkb_udfs():
     if not _WKB_UDFS:
         _WKB_UDFS.extend(_make_wkb_udfs())
     return _WKB_UDFS
-
-
-def st_aswkb_point(p: Column) -> Column:
-    """WKB POINT (01 01000000 x y) — ST_AsBinary/ST_AsWkb."""
-    return _wkb_udfs()[0](p)
-
-
-def st_aswkb_linestring(line: Column) -> Column:
-    """WKB LINESTRING (type 2) from one ring of points."""
-    return _wkb_udfs()[1](line)
-
-
-def st_aswkb_polygon(g: Column) -> Column:
-    """WKB POLYGON (type 3); rings are closed on output as WKB
-    requires."""
-    return _wkb_udfs()[2](g)
 
 
 def register_geo_functions(spark) -> None:

@@ -68,10 +68,6 @@ class _ColI(_ColB):
         return a.cast("long").bitwiseAND(m)
 
     @staticmethod
-    def tolong(a):
-        return a.cast("long")
-
-    @staticmethod
     def mkid(qf, rf, resolution: int):
         header = (1 << _MODE_BIT) | (int(resolution) << _RES_SHIFT)
         return (
@@ -92,10 +88,6 @@ class _SqlI(_SqlB):
     @staticmethod
     def mask(a, m: int):
         return _E(f"CAST({a.s} AS BIGINT) & {int(m)}")
-
-    @staticmethod
-    def tolong(a):
-        return _E(f"CAST({a.s} AS BIGINT)")
 
     @staticmethod
     def mkid(qf, rf, resolution: int):
@@ -192,12 +184,6 @@ def h3_lonlat_to_cell(lon, lat, resolution: int) -> Column:
 
 def h3_lonlat_to_cell_sql(lon: str, lat: str, resolution: int) -> str:
     return _lonlat_to_cell(_SqlI, _E(lon), _E(lat), resolution).s
-
-
-def h3_point_to_cell(point: Column, resolution: int) -> Column:
-    """H3_PointToCell(POINT, res) over the struct<x,y> point type
-    (ExtensionFunctionsH3.hpp:26-36)."""
-    return h3_lonlat_to_cell(point["x"], point["y"], resolution)
 
 
 def h3_cell_to_lon(cell) -> Column:

@@ -458,22 +458,6 @@ def rect_pixel_bin_y_sql(valy, miny, maxy, rectheight, offsety, imgheight) -> st
                      rectheight, _E(str(offsety)), imgheight).s
 
 
-def rect_pixel_bin_packed(valx, minx, maxx, valy, miny, maxy,
-                          rectwidth, rectheight, offsetx, offsety,
-                          imgwidth, imgheight) -> Column:
-    rx = rect_pixel_bin_x(valx, minx, maxx, rectwidth, offsetx, imgwidth)
-    ry = rect_pixel_bin_y(valy, miny, maxy, rectheight, offsety, imgheight)
-    return _pack_14_2(_ColB, rx, ry)
-
-
-def rect_pixel_bin_packed_sql(valx, minx, maxx, valy, miny, maxy,
-                              rectwidth, rectheight, offsetx, offsety,
-                              imgwidth, imgheight) -> str:
-    rx = _E(rect_pixel_bin_x_sql(valx, minx, maxx, rectwidth, offsetx, imgwidth))
-    ry = _E(rect_pixel_bin_y_sql(valy, miny, maxy, rectheight, offsety, imgheight))
-    return _pack_14_2(_SqlB, rx, ry).s
-
-
 def _hex_col(orient, axis):
     def fn(valx, minx, maxx, valy, miny, maxy, hexwidth, hexheight,
            offsetx, offsety, imgwidth, imgheight) -> Column:
@@ -538,14 +522,6 @@ reg_hex_vert_pixel_bin_x_sql = _hex_sql("vert", "x")
 reg_hex_vert_pixel_bin_y_sql = _hex_sql("vert", "y")
 
 
-def reg_hex_horiz_pixel_bin_packed(*args) -> Column:
-    return _pack_14_2(
-        _ColB,
-        reg_hex_horiz_pixel_bin_x(*args),
-        reg_hex_horiz_pixel_bin_y(*args),
-    )
-
-
 def reg_hex_vert_pixel_bin_packed(*args) -> Column:
     return _pack_14_2(
         _ColB,
@@ -557,11 +533,6 @@ def reg_hex_vert_pixel_bin_packed(*args) -> Column:
 def approx_distance_in_meters(fromlon, fromlat, tolon, tolat) -> Column:
     return _haversine_m(_ColB, _colwrap(fromlon), _colwrap(fromlat),
                         _colwrap(tolon), _colwrap(tolat))
-
-
-def approx_distance_in_meters_sql(fromlon, fromlat, tolon, tolat) -> str:
-    return _haversine_m(_SqlB, _E(fromlon), _E(fromlat),
-                        _E(tolon), _E(tolat)).s
 
 
 def convert_meters_to_merc_pixel_width(meters, lon, lat, min_lon, max_lon,

@@ -39,15 +39,6 @@ def linear_reg_fit(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     ).select("c.coef_idx", "c.coef")
 
 
-def reg_predict(
-    df: DataFrame, x_col: str, intercept: float, slope: float
-) -> DataFrame:
-    """ml_reg_predict analogue for the single-feature model."""
-    return df.withColumn(
-        "prediction", F.lit(intercept) + F.lit(slope) * F.col(x_col)
-    )
-
-
 def kmeans_fit(
     df: DataFrame,
     vec_col: str,

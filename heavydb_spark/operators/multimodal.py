@@ -58,11 +58,6 @@ def _decode_image(payload: bytes) -> "object":
     raise NotImplementedError("image decode requires PIL/opencv (not installed)")
 
 
-def _decode_audio(payload: bytes) -> "object":
-    """STUB — real impl: soundfile/librosa decode."""
-    raise NotImplementedError("audio decode requires soundfile (not installed)")
-
-
 def extract_features(media: DataFrame, batch_metadata_only: bool = True) -> DataFrame:
     """Feature extraction over media batches via mapInPandas.
 

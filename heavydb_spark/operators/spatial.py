@@ -413,17 +413,6 @@ def geo_multi_rasterize(
     ).agg(*aggs)
 
 
-# Packing for (ix, iy) bin indices into one long node id: offsets keep
-# negatives positive, 2^21 bins per axis (±1M bins ~ raster side of 2M
-# cells — far beyond any practical raster extent).
-_BIN_OFF = 1 << 20
-_BIN_MUL = 1 << 21
-
-
-def _pack_bin(ix: Column, iy: Column) -> Column:
-    return (ix + _BIN_OFF) * _BIN_MUL + (iy + _BIN_OFF)
-
-
 def cross_section_2d(
     points: DataFrame,
     x1: float,

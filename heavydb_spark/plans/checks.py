@@ -51,10 +51,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in plan_string(df, "simple")
 
 
-def uses_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in plan_string(df, "simple")
-
-
 def whole_stage_codegen_count(df: DataFrame) -> int:
     """Number of fused codegen stages (the Tungsten analogue of the
     reference's per-query LLVM module). With AQE the simple plan hides

@@ -32,326 +32,3 @@ from heavydb_spark.queries import (  # noqa: F401,E402
     tpch,
     invariants,
 )
-
-# ---------------------------------------------------------------------------
-# Registration-order priority.
-#
-# The verify driver correctness-checks queries in registration order
-# with a bounded budget (~50 per round).  Driver union r1-r13: 257/257
-# per the committed rotation plan (VERDICT r13 gate).  Round-14
-# executes the r13 verdict queue #1: the window below pins every r13
-# rewrite (and the r14 optimization targets) for window-grade sf0.01
-# hash verification.
-#
-# ROUND-14 WINDOW (positions 1-50) — composed this round (r14):
-#   1-19   the r13/r14 regression slice — tpch_q21 + tpcds_q64 (the
-#          r13 window/lead rewrites, never driver-window-verified in
-#          their new form), dedup_span_rewrite + dedup_boilerplate_
-#          segments + dedup_shared_run + join_fuzzy_names (r13
-#          set-rebuild / doc-alignment / flat-key / hashed-variant
-#          changes), pipe_curation_v2 + pipe_end_to_end_corpus (chain
-#          the changed dedup operators), dedup_minhash_lsh (rows-only)
-#          paired in-window with its exact companions
-#          dedup_minhash_portable + dedup_simhash_portable (the
-#          portable sketch pair, r13 F.expr builders), text_quality +
-#          render_pixel_bins (r13 range_spread / named-column
-#          changes past the r13 window), tpcds_q67_rollup_rank +
-#          text_lm_perplexity (r14 optimization targets), plus the
-#          four operators whose code changed after the window was
-#          first composed (jaccard, connected_components,
-#          model_filter_chain, source_divergence — see the in-list
-#          note);
-#   20-50  the oldest-checked entries (r6-r9 greens) in age order —
-#          tf_dwell_times onward (the last four fills slide to
-#          positions 51-54, next in line for r15).
-#
-# Past position 100: the remaining r6-r9 greens freshest-last in
-# unchanged relative order; then the 50 entries the r12 driver
-# checked; the 50 entries the r13 driver just checked sit at the very
-# end (freshest).
-# ---------------------------------------------------------------------------
-_PRIORITY = [
-    # --- ROUND-14 WINDOW (positions 1-50): r13/r14 regression
-    # slice + oldest-checked entries in age order ---
-    "tpch_q21_waiting_supplier",
-    "tpcds_q64_cross_year_sales",
-    "dedup_span_rewrite",
-    "dedup_boilerplate_segments",
-    "dedup_shared_run",
-    "join_fuzzy_names",
-    "pipe_curation_v2",
-    "pipe_end_to_end_corpus",
-    # r14 additions to the slice: these four changed AFTER the window
-    # was first composed this round (jaccard/CC: hashed gram-struct
-    # keys + the distinct-checkpoint drop; model_filter_chain chains
-    # the re-shaped shared_run; source_divergence: spread-count
-    # change) — window-grade verification of the new forms
-    "dedup_ngram_jaccard",
-    "dedup_connected_components",
-    "pipe_model_filter_chain",
-    "text_source_divergence",
-    "dedup_minhash_lsh",
-    "dedup_minhash_portable",
-    "dedup_simhash_portable",
-    "text_quality",
-    "render_pixel_bins",
-    "tpcds_q67_rollup_rank",
-    "text_lm_perplexity",
-    # (oldest-checked fill, age order)
-    "tf_dwell_times",
-    "tf_feature_similarity",
-    "tf_geo_rasterize",
-    "tf_geo_rasterize_slope",
-    "tf_graph_shortest_paths",
-    "agg_count_if_sum_if",
-    "agg_groupby_multicol",
-    "dedup_fingerprint",
-    "fn_datetime",
-    "fn_decimal",
-    "geo_grid_join",
-    "geo_linestring_props",
-    "geo_polygon_intersects",
-    "geo_transform_900913",
-    "geo_wkt_roundtrip",
-    "join_multistep_tpch_q10",
-    "join_multistep_tpch_q3",
-    "join_multistep_tpch_q5",
-    "join_star_agg",
-    "ml_decision_trees",
-    "ml_forest_predict",
-    "ml_kmeans",
-    "ml_linear_reg2",
-    "ml_pca_fit",
-    "ml_pca_project",
-    "ml_var_importance",
-    "mm_frame_sample",
-    "pipe_decontaminate",
-    "pipe_dictionary_encode",
-    "pipe_pii_scrub",
-    "pipe_sample_stratified",
-    "pricing_summary",
-    "scan_project_filter",
-    "stream_interval_join",
-    "stream_sliding_window",
-    # --- past the window: remaining r6-r9 greens freshest-last ---
-    "tf_cross_section_2d",
-    "tf_feature_query_similarity",
-    "tf_mandelbrot",
-    "tf_raster_contour",
-    "tf_raster_contour_bands",
-    "union_distinct",
-    "window_forward_fill",
-    "window_moving_avg",
-    "sim_ann_ivfpq",
-    "sim_ann_ivfpq_invariants",
-    "geo_geos_concavehull",
-    "geo_geos_convexhull",
-    "ml_decision_trees_invariants",
-    "ml_forest_invariants",
-    "ml_kmeans_invariants",
-    "ml_pca_fit_invariants",
-    "ml_pca_invariants",
-    "ml_var_importance_invariants",
-    "pipe_dedup_keep_best",
-    "stream_interval_join_full",
-    "stream_interval_join_outer",
-    "tf_raster_slope_path_invariants",
-    "tpcds_q36_hierarchy_rank",
-    "tpch_q11_important_value",
-    "tpch_q12_priority_class",
-    "fn_dialect_probe_closeout",
-    "tf_generate_series",
-    "tf_generate_series_ts",
-    "fn_string_distance",
-    "tpch_q13_order_distribution",
-    "tpch_q14_promo_revenue",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_cnt",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q4_priority_exists",
-    "tpch_q8_market_share",
-    "tpch_q18_large_orders",
-    "tpch_q19_disjunctive_join",
-    "tpch_q20_nested_in",
-    "tpch_q22_global_sales",
-    "case_expr",
-    "in_list_filter",
-    "values_literal",
-    "null_handling",
-    "sort_limit_offset",
-    "join_theta_loop",
-    "join_multistep_tpch_q7",
-    "subquery_correlated_scalar",
-    "subquery_not_in_nulls",
-    "window_ranks",
-    "window_range_interval",
-    "window_lag_lead_in_frame",
-    "sql_dialect_window_fill",
-    "sql_dialect_null_order",
-    "union_all",
-    "sim_ann_lsh",
-    "sim_embedding_neardup",
-    "pipe_mix_sources",
-    "pipe_pack_sequences",
-    "text_repetition",
-    "tf_generate_random_strings",
-    "ml_dbscan",
-    "tf_raster_slope_path",
-    "geo_geos_union_diff",
-    "geo_transform_utm",
-    "tf_point_cloud_metadata",
-    "tf_load_point_cloud",
-    "sql_dialect_int_division",
-    "agg_grouping_sets",
-    "agg_filter_clause",
-    "sql_dialect_geo_predicates",
-    "fn_string_extra",
-    "tf_torch_obj_detect",
-    "geo_buffer_dispatch",
-    "geo_transform_epsg",
-    "geo_h3_binning",
-    "tpch_q9_product_profit",
-    "tpcds_cross_channel",
-    "tpcds_q51_cumulative_join",
-    "tpcds_q88_band_counts",
-    "tpcds_q47_monthly_deviation",
-    "tpcds_q74_yoy_growth",
-    "ml_model_ddl_tree",
-    "ml_model_ddl_pca",
-    "sim_pq_invariants",
-    "pipe_tokenize_pack",
-    "pipe_corpus_report",
-    "pipe_epoch_oversample",
-    "pipe_mix_token_budget",
-    "sim_semantic_dedup",
-    "text_quality_classifier",
-    "sim_semantic_dedup_kmeans",
-    "sim_semantic_kmeans_invariants",
-    "pipe_dsir_select",
-    "pipe_mix_temperature",
-    "text_ngram_vocab",
-    "text_tfidf_topterms",
-    "pipe_source_overlap",
-    "text_bpe_first_merge",
-    "text_bpe_train",
-    "text_heavy_hitters",
-    "text_bpe_encode_contract",
-    "text_bpe_encode",
-    "text_bpe_encode_invariants",
-    "pipe_shard_assign",
-    "sim_label_centroids",
-    "text_gopher_filter",
-    "text_bm25_topk",
-    # --- the 50 entries the r12 driver checked ---
-    "text_chunk_windows",
-    "geo_transform_datum",
-    "tpcds_q49_ranked_returns",
-    "tpcds_q38_triple_intersect",
-    "tpcds_q1_returns_above_avg",
-    "tpcds_q93_net_after_returns",
-    "tpcds_q23_frequent_best",
-    "tpcds_q95_returned_multi_supplier",
-    "tpcds_q17_quantity_variability",
-    "tpcds_q34_frequent_buyer_band",
-    "distinct_projection",
-    "agg_count_star",
-    "agg_groupby_count",
-    "agg_groupby_avg",
-    "agg_groupby_highcard",
-    "agg_count_distinct",
-    "agg_approx_count_distinct",
-    "agg_approx_percentile",
-    "agg_approx_invariants",
-    "agg_exact_median",
-    "agg_mode",
-    "agg_sample_any_value",
-    "agg_having",
-    "agg_stats",
-    "agg_rollup",
-    "agg_cube",
-    "sort_topk",
-    "agg_hll_sketch_merge",
-    "agg_pivot_matrix",
-    "join_left_outer",
-    "join_semi",
-    "join_anti",
-    "join_multi_key",
-    "join_range_qual",
-    "join_null_safe",
-    "subquery_scalar",
-    "subquery_correlated_exists",
-    "subquery_in_select",
-    "join_asof_backward",
-    "window_row_number_topn",
-    "window_lag_lead",
-    "window_running_sum",
-    "window_ntile_firstlast",
-    "window_conditional_change_event",
-    "fn_string_basic",
-    "fn_string_regex",
-    "sim_scalar_quantize",
-    "sim_pq_encode",
-    # --- the 50 entries the r13 driver just checked (freshest) ---
-    "sql_dialect_geo_typed_math",
-    "dml_coercion_postimage",
-    "dml_update_postimage",
-    "dml_update_correlated_postimage",
-    "dml_delete_postimage",
-    "fn_cast_trycast",
-    "fn_array_ops",
-    "geo_multipolygon_props",
-    "geo_polygon_props",
-    "geo_accessors_distance",
-    "sim_hybrid_retrieval",
-    "pipe_weighted_sample",
-    "pipe_winsorize",
-    "pipe_split_no_leakage",
-    "geo_zorder_layout",
-    "tpcds_q59_wow_ratio",
-    "tpcds_q78_channel_ratio",
-    "tpcds_q72_followup_orders",
-    "dedup_exact",
-    "dedup_simhash",
-    "except_keys",
-    "fn_datetime_week_variants",
-    "fn_encode_hash",
-    "fn_json_value",
-    "fn_math",
-    "fn_udaf_geomean",
-    "fn_unnest_explode",
-    "geo_bbox_join",
-    "geo_point_distance",
-    "geo_polygon_contains_join",
-    "geo_range_join",
-    "intersect_keys",
-    "like_regexp_filter",
-    "llm_transform_template",
-    "ml_linear_reg",
-    "ml_r2_score",
-    "mm_media_features",
-    "sim_ann_ivf",
-    "sim_ann_ivf_invariants",
-    "sim_cosine_topk",
-    "stream_dedup_events",
-    "stream_session_window",
-    "stream_tumbling_window",
-    "text_lang_id",
-    "text_token_stats",
-    "tf_cross_section_1d",
-]
-
-
-def _reorder() -> None:
-    known = [n for n in _PRIORITY if n in QUERIES]
-    rest = [n for n in QUERIES if n not in set(known)]
-    order = known + rest
-    for mapping in (QUERIES, ORACLES):
-        snapshot = dict(mapping)
-        mapping.clear()
-        mapping.update(
-            {n: snapshot[n] for n in order if n in snapshot}
-        )
-
-
-_reorder()

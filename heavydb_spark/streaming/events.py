@@ -148,25 +148,6 @@ def dedup_stream(events: DataFrame, delay: str = "1 hour") -> DataFrame:
     )
 
 
-def run_to_memory(
-    df: DataFrame, name: str, spark: SparkSession,
-    output_mode: str = "append",
-):
-    """Run a streaming DF to completion into an in-memory sink (tests).
-    `output_mode`: "append" (joins, dedup, watermarked windows — the
-    ops in this module) or "complete" (unwatermarked aggregations
-    only; Spark rejects complete for non-aggregations)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
 def stateful_sessionize(
     events: DataFrame, gap_minutes: int = 30, delay: str = "1 hour"
 ) -> DataFrame:

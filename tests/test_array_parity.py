@@ -1,6 +1,6 @@
 """r11 ArrayTest parity pins — the classes the ArrayTest comparator
-(scripts/array_test_probe.py) surfaced, each pinned with the
-reference's own expected values.
+(scripts/array_test_probe.py, removed after commit e45d69f) surfaced,
+each pinned with the reference's own expected values.
 
 References: Tests/ArrayTest.cpp (expectations quoted per test),
 ExtensionFunctionsArray.hpp (array_append/array_equal families),

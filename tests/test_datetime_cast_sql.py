@@ -208,8 +208,8 @@ def _fuzz_corpus(seed: int, n: int) -> list:
 def check_fuzz_corpus(spark, corpus) -> list:
     """Evaluate the three SQL chains over `corpus` and compare each
     result with the Python port.  Returns a list of mismatch tuples
-    (empty = clean).  Shared with scripts/seed_sweep.py's dtcast
-    family."""
+    (empty = clean).  Also called by scripts/seed_sweep.py's dtcast
+    family, a seed-sweep script removed after commit e45d69f."""
     df = spark.createDataFrame([(s,) for s in corpus], ["s"])
     df.createOrReplaceTempView("_dt_fuzz")
     rows = spark.sql(

@@ -1549,8 +1549,9 @@ def test_update_column_named_date_coerces(spark, engine):
 
 def test_ctas_update_comparator_pins(spark, engine):
     """Engine fixes found by the CtasUpdateTest comparator
-    (scripts/ctas_update_probe.py, r13): CHAR(n) columns store
-    unpadded text (kCHAR reads back plain, CtasUpdateTest.cpp:224);
+    (scripts/ctas_update_probe.py, r13; removed after commit e45d69f):
+    CHAR(n) columns store unpadded text (kCHAR reads back plain,
+    CtasUpdateTest.cpp:224);
     TIME[] array elements parse seconds-of-day at rewrite time
     (TIME_ARRAY ingestion); a table NAME ending in _WITH is not an
     options clause (Ctas.SyntaxCheck:1302); CREATE TEMPORARY TABLE AS

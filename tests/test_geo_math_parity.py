@@ -1,6 +1,7 @@
 """r11 GeoSpatial.Math parity pins — the classes the repo-wide
-constant-assertion comparator (scripts/constant_assertions_probe.py)
-surfaced, each pinned with the reference's own expected values.
+constant-assertion comparator (scripts/constant_assertions_probe.py,
+removed after commit e45d69f) surfaced, each pinned with the
+reference's own expected values.
 
 References: Tests/GeospatialTest.cpp GeoSpatial.Math (expectations
 quoted per test), QueryEngine/ExtensionFunctionsGeo.hpp (the

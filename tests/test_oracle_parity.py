@@ -130,15 +130,3 @@ def test_canonical_is_driver_faithful():
     assert canonical([[Decimal("0.80")]]) == canonical([[Decimal("0.80")]])
     # float tolerance (6-digit rounding) is preserved
     assert canonical([[0.8000000001]]) == canonical([[0.8]])
-
-
-def test_priority_names_all_registered():
-    """Every name in the registration-priority list must exist in the
-    catalog — a rename would otherwise silently drop a family out of
-    the driver's bounded correctness window."""
-    from heavydb_spark.queries import QUERIES, _PRIORITY
-
-    missing = [n for n in _PRIORITY if n not in QUERIES]
-    assert not missing, f"priority names not registered: {missing}"
-    # and the window-front names are unique
-    assert len(_PRIORITY) == len(set(_PRIORITY))

@@ -502,6 +502,34 @@ def test_boilerplate_segments_plan_shape(spark):
     assert "LeftAnti" in s, s
 
 
+def test_boilerplate_segments_respects_broadcast_threshold(spark):
+    """remove_boilerplate_segments leaves the anti join's strategy to the
+    planner: min_docs does not bound the boilerplate set's size, so with
+    broadcasting switched off the plan holds no BroadcastExchange, and
+    the sort-merge form returns the same rows."""
+    from heavydb_spark.operators.dedup import remove_boilerplate_segments
+
+    df = spark.createDataFrame(
+        [(1, "hdr x a b"), (2, "hdr x c d"), (3, "hdr x"), (4, "e f z")],
+        "doc_id long, text string",
+    )
+
+    def run():
+        out = remove_boilerplate_segments(df, "doc_id", "text", seg=2,
+                                          min_docs=3)
+        return checks.plan_string(out, "formatted"), sorted(out.collect())
+
+    _, expected = run()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan, got = run()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "BroadcastExchange" not in plan, plan
+    assert got == expected
+
+
 def test_bpe_encode_plan_broadcast_decorate(spark):
     """text_bpe_encode_contract: the word-type encodings decorate the
     exploded corpus through a BROADCAST join (vocabularies are small

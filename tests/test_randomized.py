@@ -972,8 +972,8 @@ _DML_COERCE_TYPES = [
 
 def run_dml_coercion_case(engine, seed: int) -> list[str]:
     """One randomized DDL+INSERT+UPDATE round trip; returns mismatch
-    descriptions (empty == green). Shared by the committed range and
-    scripts/seed_sweep.py."""
+    descriptions (empty == green). Also called by scripts/seed_sweep.py,
+    a seed-sweep script removed after commit e45d69f."""
     rng = random.Random(2_120_000 + seed)
     spark = engine.spark
     n_cols = rng.randint(2, 5)

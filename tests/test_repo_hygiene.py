@@ -1,0 +1,115 @@
+"""Repository hygiene: no unreachable definitions, no stale doc paths.
+
+Both checks read source text only (stdlib `ast` + `tokenize`); neither
+starts Spark.
+"""
+
+from __future__ import annotations
+
+import ast
+import io
+import os
+import re
+import tokenize
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Where a reference to a heavydb_spark definition may live.
+SEARCH = ("heavydb_spark", "tests", "perfbench", "__spark_entry__.py")
+LIVE_DOCS = ("README.md", os.path.join(".claude", "skills", "verify", "SKILL.md"))
+
+_WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _py_files(rel: str) -> list[str]:
+    path = os.path.join(ROOT, rel)
+    if os.path.isfile(path):
+        return [path]
+    out = []
+    for d, _, files in os.walk(path):
+        out += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    return sorted(out)
+
+
+def _definitions(path: str) -> list[tuple[str, int]]:
+    """Top-level functions and classes, plus every method of every class."""
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), path)
+    defs = ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef
+    nodes = [n for n in tree.body if isinstance(n, defs)]
+    for cls in ast.walk(tree):
+        if isinstance(cls, ast.ClassDef):
+            nodes += [n for n in cls.body
+                      if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+    return [(n.name, n.lineno) for n in nodes
+            if not (n.name.startswith("__") and n.name.endswith("__"))]
+
+
+def _docstring_starts(source: str) -> set[tuple[int, int]]:
+    scopes = ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef
+    return {
+        (node.body[0].lineno, node.body[0].col_offset)
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, scopes) and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+        and isinstance(node.body[0].value.value, str)
+    }
+
+
+def _references() -> tuple[set[str], set[str]]:
+    """Code-name tokens (minus the names that `def`/`class` introduce) and
+    the lower-cased words of every string literal. Comments and docstrings
+    are prose: they may name a reference-engine function of the same name."""
+    names: set[str] = set()
+    words: set[str] = set()
+    for rel in SEARCH:
+        for path in _py_files(rel):
+            with open(path, encoding="utf-8") as f:
+                source = f.read()
+            docstrings = _docstring_starts(source)
+            prev = None
+            for tok in tokenize.generate_tokens(io.StringIO(source).readline):
+                if tok.type == tokenize.NAME and prev not in ("def", "class"):
+                    names.add(tok.string)
+                elif tok.type == tokenize.STRING and tok.start not in docstrings:
+                    words.update(w.lower() for w in _WORD.findall(tok.string))
+                if tok.type not in (tokenize.COMMENT, tokenize.NL):
+                    prev = tok.string
+    return names, words
+
+
+def test_no_unreachable_definitions():
+    names, words = _references()
+    dead = [
+        f"{os.path.relpath(path, ROOT)}:{line} {name}"
+        for path in _py_files("heavydb_spark")
+        for name, line in _definitions(path)
+        if name not in names and name.lower() not in words
+    ]
+    assert not dead, "defined but never referenced:\n" + "\n".join(dead)
+
+
+def test_live_doc_paths_exist():
+    """Every repo path written in backticks in the live docs must exist."""
+    missing = []
+    for doc in LIVE_DOCS:
+        with open(os.path.join(ROOT, doc), encoding="utf-8") as f:
+            text = f.read()
+        spans = re.findall(r"```[^\n]*\n(.*?)```", text, re.S)
+        spans += re.findall(r"`([^`\n]+)`", re.sub(r"```.*?```", "", text, flags=re.S))
+        for span in spans:
+            for token in span.split():
+                path = token.strip("()[],;:'\"")
+                if not _looks_like_repo_path(path):
+                    continue
+                if not os.path.exists(os.path.join(ROOT, path)):
+                    missing.append(f"{doc}: {path}")
+    assert not missing, "stale paths in docs:\n" + "\n".join(missing)
+
+
+def _looks_like_repo_path(token: str) -> bool:
+    if not re.match(r"[A-Za-z_]", token) or token.startswith("http"):
+        return False
+    if "/" in token:
+        return bool(re.fullmatch(r"[\w.\-/]+", token))
+    return bool(re.fullmatch(r"[\w\-]+\.(py|md|json|toml|cfg|txt)", token))

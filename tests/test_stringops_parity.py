@@ -1,6 +1,6 @@
 """r10 StringOps parity pins — the classes the StringFunctionsTest
-comparator (scripts/string_functions_probe.py) surfaced, each pinned
-with the reference's own expected values.
+comparator (scripts/string_functions_probe.py, removed after commit
+e45d69f) surfaced, each pinned with the reference's own expected values.
 
 References: StringOps/StringOps.h:42 (NullableStrType empty rule),
 StringOps.cpp:905-955 (UrlEncode/UrlDecode), StringOps.cpp
