@@ -18,8 +18,11 @@ from heavydb_spark.functions.render import register_render_functions
 from heavydb_spark.functions.h3 import register_h3_functions
 
 
-# Registration is idempotent but NOT free: ~80 CREATE FUNCTION
-# statements + pandas-UDF registrations cost several seconds, and every
+# Registration is idempotent but NOT free. Seconds per family on a
+# 4-core VM (local[2], quick JIT only), cold (first in the JVM) / warm
+# (again in the same JVM): geo 6.6 / 2.4, strings 2.3 / 0.05, h3
+# 2.3 / 0.4, render 2.1 / 0.3, arrays + geos 0.4 / 0.1; 14 s cold, most
+# of it the parser's and analyzer's first use, 3.3 s warm. Every
 # Engine() construction calls register_all — memoize per live session.
 # Weak-keyed so stopped sessions stay garbage-collectable (id() reuse
 # is a non-issue: the entry dies with the session).

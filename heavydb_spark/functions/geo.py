@@ -1169,7 +1169,12 @@ def tm_to_wgs84_full(easting: Column, northing: Column, srid: int) -> Column:
     prm = _EPSG_TM[srid]
     if prm.datum is None:
         return tm_to_wgs84(easting, northing, srid)
-    local = tm_to_wgs84(easting, northing, srid)  # local-datum lon/lat
+    # the inverse series references easting/northing dozens of times:
+    # bind them once, or a computed input is inlined at each reference
+    en = F.struct(
+        easting.cast("double").alias("x"), northing.cast("double").alias("y")
+    )
+    local = _bind_once(en, lambda q: tm_to_wgs84(q["x"], q["y"], srid))
     return _datum_to_wgs84(local, prm.datum)
 
 

@@ -90,8 +90,12 @@ class _SqlI(_SqlB):
         return _E(f"CAST({a.s} AS BIGINT) & {int(m)}")
 
     @staticmethod
-    def mkid(qf, rf, resolution: int):
-        header = (1 << _MODE_BIT) | (int(resolution) << _RES_SHIFT)
+    def mkid(qf, rf, resolution):
+        if isinstance(resolution, _E):  # a runtime resolution
+            header = (f"{1 << _MODE_BIT} + shiftleft("
+                      f"CAST({resolution.s} AS BIGINT), {_RES_SHIFT})")
+        else:
+            header = (1 << _MODE_BIT) | (int(resolution) << _RES_SHIFT)
         return _E(
             f"CAST({qf.s} AS BIGINT) * {1 << _Q_SHIFT} "
             f"+ CAST({rf.s} AS BIGINT) + {header}"
@@ -118,8 +122,8 @@ def _axial_round(ops, qf, rf):
     return q, r
 
 
-def _lonlat_to_cell(ops, lon, lat, resolution: int):
-    size = _size(resolution)
+def _lonlat_to_cell(ops, lon, lat, resolution, size=None):
+    size = _size(resolution) if size is None else size
     qf = (lon * (SQRT3 / 3.0) - lat * (1.0 / 3.0)) / size
     rf = (lat * (2.0 / 3.0)) / size
     q, r = _axial_round(ops, qf, rf)
@@ -263,49 +267,43 @@ def h3_cell_to_boundary_wkt(cell) -> Column:
 
 def register_h3_functions(spark) -> None:
     """Register the H3_* family as Spark SQL scalar functions so the
-    reference's H3 SQL runs through `engine.sql` (all codegen). The
-    dynamic-resolution forms expand to a CASE over the 16 valid
-    resolutions — still one codegen'd expression."""
-    branches = " ".join(
-        f"WHEN {r} THEN {h3_lonlat_to_cell_sql('lon', 'lat', r)}"
-        for r in range(16)
-    )
-    parent_branches = " ".join(
-        "WHEN {r} THEN {expr}".format(
-            r=r,
-            expr=h3_lonlat_to_cell_sql(
-                "h3_celltolon(cell)", "h3_celltolat(cell)", r
-            ),
-        )
-        for r in range(16)
-    )
-    stmts = [
-        "CREATE OR REPLACE TEMPORARY FUNCTION h3_lonlattocell("
-        "lon DOUBLE, lat DOUBLE, resolution INT) RETURNS BIGINT RETURN "
-        f"CASE resolution {branches} "
-        "ELSE CAST(raise_error('H3_LonLatToCell: invalid resolution') "
-        "AS BIGINT) END",
-        "CREATE OR REPLACE TEMPORARY FUNCTION h3_pointtocell("
-        "p STRUCT<x: DOUBLE, y: DOUBLE>, resolution INT) RETURNS BIGINT "
-        "RETURN h3_lonlattocell(p.x, p.y, resolution)",
-        "CREATE OR REPLACE TEMPORARY FUNCTION h3_celltolon(cell BIGINT) "
-        f"RETURNS DOUBLE RETURN {h3_cell_to_lon_sql('cell')}",
-        "CREATE OR REPLACE TEMPORARY FUNCTION h3_celltolat(cell BIGINT) "
-        f"RETURNS DOUBLE RETURN {h3_cell_to_lat_sql('cell')}",
-        "CREATE OR REPLACE TEMPORARY FUNCTION h3_celltoparent("
-        "cell BIGINT, resolution INT) RETURNS BIGINT RETURN "
-        f"CASE resolution {parent_branches} "
-        "ELSE CAST(raise_error('H3_CellToParent: invalid resolution') "
-        "AS BIGINT) END",
-        "CREATE OR REPLACE TEMPORARY FUNCTION h3_isvalidcell(cell BIGINT) "
-        f"RETURNS BOOLEAN RETURN {h3_is_valid_cell_sql('cell')}",
-        "CREATE OR REPLACE TEMPORARY FUNCTION h3_celltostring(cell BIGINT) "
-        "RETURNS STRING RETURN lower(lpad(hex(cell), 16, '0'))",
-        "CREATE OR REPLACE TEMPORARY FUNCTION h3_stringtocell(s STRING) "
-        "RETURNS BIGINT RETURN CAST(conv(s, 16, 10) AS BIGINT)",
-    ]
-    for s in stmts:
-        spark.sql(s)
+    reference's H3 SQL runs through `engine.sql` (all codegen). As in the
+    reference, one formula takes the resolution at run time:
+    `h3_lonlattocell` passes the resolution's cell size to
+    `h3_lonlattocell_sized` as an argument, so the size lookup is bound
+    once, and `h3_celltoparent` re-encodes the cell center through it."""
+    cell = _lonlat_to_cell(_SqlI, _E("lon"), _E("lat"), _E("resolution"),
+                           _E("size"))
+    sizes = " ".join(f"WHEN {r} THEN {_size(r)!r}" for r in range(16))
+
+    def guarded(call: str, name: str) -> str:
+        return (f"CASE WHEN resolution BETWEEN 0 AND 15 THEN {call} ELSE CAST("
+                f"raise_error('{name}: invalid resolution') AS BIGINT) END")
+
+    for sig, body in (
+        ("h3_lonlattocell_sized(lon DOUBLE, lat DOUBLE, size DOUBLE, "
+         "resolution INT) RETURNS BIGINT", cell.s),
+        ("h3_lonlattocell(lon DOUBLE, lat DOUBLE, resolution INT) "
+         "RETURNS BIGINT", guarded(
+             "h3_lonlattocell_sized(lon, lat, "
+             f"CASE resolution {sizes} END, resolution)", "H3_LonLatToCell")),
+        ("h3_pointtocell(p STRUCT<x: DOUBLE, y: DOUBLE>, resolution INT) "
+         "RETURNS BIGINT", "h3_lonlattocell(p.x, p.y, resolution)"),
+        ("h3_celltolon(cell BIGINT) RETURNS DOUBLE",
+         h3_cell_to_lon_sql("cell")),
+        ("h3_celltolat(cell BIGINT) RETURNS DOUBLE",
+         h3_cell_to_lat_sql("cell")),
+        ("h3_celltoparent(cell BIGINT, resolution INT) RETURNS BIGINT",
+         guarded("h3_lonlattocell(h3_celltolon(cell), h3_celltolat(cell), "
+                 "resolution)", "H3_CellToParent")),
+        ("h3_isvalidcell(cell BIGINT) RETURNS BOOLEAN",
+         h3_is_valid_cell_sql("cell")),
+        ("h3_celltostring(cell BIGINT) RETURNS STRING",
+         "lower(lpad(hex(cell), 16, '0'))"),
+        ("h3_stringtocell(s STRING) RETURNS BIGINT",
+         "CAST(conv(s, 16, 10) AS BIGINT)"),
+    ):
+        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {sig} RETURN {body}")
 
 
 def h3_cell_to_point(cell) -> Column:

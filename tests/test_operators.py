@@ -1843,6 +1843,87 @@ def test_h3_cell_roundtrips_and_hierarchy(spark):
     assert abs(area - 3.0 * math.sqrt(3.0) / 2.0 * size5 * size5) < 1e-4
 
 
+def test_h3_registered_sql_matches_text_builders(spark):
+    """The registered H3_* SQL functions, which take the resolution as
+    a runtime argument, return exactly what the per-resolution
+    `h3_*_sql` text builders return: all 16 resolutions, on seeded
+    random points plus hex edge midpoints and vertices, each exactly
+    and moved a relative 1e-9 inward and outward. Out-of-range
+    resolutions raise each function's own error."""
+    import math
+    import random
+
+    from heavydb_spark.functions import h3 as H
+    from heavydb_spark.functions import register_all
+
+    register_all(spark)
+    rng = random.Random(5_000)
+    rows = []
+    for res in range(16):
+        size = H._size(res)
+        pts = [(rng.uniform(-180, 180), rng.uniform(-90, 90))
+               for _ in range(24)]
+        for _ in range(3):
+            # a cell center near a random point; its edge midpoints lie
+            # one apothem away, its vertices one circumradius
+            lon, lat = rng.uniform(-170, 170), rng.uniform(-80, 80)
+            q = round((lon * math.sqrt(3) / 3 - lat / 3) / size)
+            r = round(lat * 2 / 3 / size)
+            clon = (q * math.sqrt(3) + r * math.sqrt(3) / 2) * size
+            clat = r * 1.5 * size
+            for k in range(6):
+                for ang, dist in ((60 * k, size * math.sqrt(3) / 2),
+                                  (60 * k + 30, size)):
+                    for nudge in (1 - 1e-9, 1.0, 1 + 1e-9):
+                        d = dist * nudge
+                        pts.append((clon + d * math.cos(math.radians(ang)),
+                                    clat + d * math.sin(math.radians(ang))))
+        rows += [(len(rows) + i, lon, lat, res, res // 2, (res + 7) % 16)
+                 for i, (lon, lat) in enumerate(pts)]
+    spark.createDataFrame(
+        rows, "id long, lon double, lat double, res int, pa int, pb int"
+    ).createOrReplaceTempView("h3_grid")
+
+    got = {
+        row[0]: tuple(row[1:]) for row in spark.sql(
+            "SELECT id, c, h3_pointtocell(named_struct('x', lon, 'y', lat),"
+            " res), h3_celltolon(c), h3_celltolat(c),"
+            " h3_celltoparent(c, pa), h3_celltoparent(c, pb),"
+            " h3_isvalidcell(c), h3_celltostring(c),"
+            " h3_stringtocell(h3_celltostring(c)) FROM ("
+            "SELECT *, h3_lonlattocell(lon, lat, res) AS c FROM h3_grid)"
+        ).collect()
+    }
+    want = {}
+    for res in range(16):
+        for row in spark.sql(
+            f"SELECT id, c, {H.h3_cell_to_lon_sql('c')},"
+            f" {H.h3_cell_to_lat_sql('c')},"
+            f" {H.h3_cell_to_parent_sql('c', res // 2)},"
+            f" {H.h3_cell_to_parent_sql('c', (res + 7) % 16)},"
+            f" {H.h3_is_valid_cell_sql('c')} FROM ("
+            f"SELECT id, {H.h3_lonlat_to_cell_sql('lon', 'lat', res)} AS c"
+            f" FROM h3_grid WHERE res = {res})"
+        ).collect():
+            i, c, lo, la, p_a, p_b, ok = row
+            want[i] = (c, c, lo, la, p_a, p_b, ok, f"{c:016x}", c)
+    assert len(want) == len(rows)
+    diff = [(i, got.get(i), want[i]) for i in sorted(want)
+            if got.get(i) != want[i]]
+    assert not diff, f"{len(diff)} rows differ, first: {diff[:3]}"
+
+    for sql, msg in (
+        ("h3_lonlattocell(lon, lat, res + 16)",
+         "H3_LonLatToCell: invalid resolution"),
+        ("h3_pointtocell(named_struct('x', lon, 'y', lat), -1 - res)",
+         "H3_LonLatToCell: invalid resolution"),
+        ("h3_celltoparent(h3_lonlattocell(lon, lat, res), res + 16)",
+         "H3_CellToParent: invalid resolution"),
+    ):
+        with pytest.raises(Exception, match=msg):
+            spark.sql(f"SELECT {sql} FROM h3_grid").collect()
+
+
 def test_h3_geometry_typed_variants(spark):
     """H3_CellToPoint / H3_CellToBoundary (H3Runtime.cpp geometry
     variants): the point is the decoded center; the boundary polygon
@@ -1962,6 +2043,19 @@ def test_datum_shift_helmert(spark):
     p = geo.st_point(F.col("lon"), F.col("lat"))
     via = df.select(geo.st_transform(p, 4326, 27700).alias("v")).first().v
     assert abs(via.x - r.f.x) < 1e-6 and abs(via.y - r.f.y) < 1e-6
+
+
+def test_datum_shift_round_trip_expression_stays_small(spark):
+    """tm_to_wgs84_full binds its easting/northing inputs once. Fed
+    the 27700 forward transform, the round-trip expression stays under
+    500,000 characters; inlining the inputs at every reference of the
+    inverse series built about 5.2 million, which took over a minute
+    to plan for one row."""
+    from heavydb_spark.functions import geo
+
+    full = geo.tm_from_wgs84_full(F.col("lon"), F.col("lat"), 27700)
+    back = geo.tm_to_wgs84_full(full["x"], full["y"], 27700)
+    assert len(back._jc.toString()) < 500_000
 
 
 def test_shared_run_pairs_containment_and_longest_run(spark):

@@ -1,7 +1,10 @@
-"""Repository hygiene: no unreachable definitions, no stale doc paths.
+"""Repository hygiene: no unreachable definitions, no stale doc paths,
+no bloated SQL function bodies.
 
-Both checks read source text only (stdlib `ast` + `tokenize`); neither
-starts Spark.
+The first two checks read source text only (stdlib `ast` + `tokenize`).
+The body-size check records the text `register_all` would send to Spark;
+it takes the `spark` fixture only because pandas-UDF return types parse
+against an active session.
 """
 
 from __future__ import annotations
@@ -11,6 +14,7 @@ import io
 import os
 import re
 import tokenize
+from types import SimpleNamespace
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Where a reference to a heavydb_spark definition may live.
@@ -18,6 +22,12 @@ SEARCH = ("heavydb_spark", "tests", "perfbench", "__spark_entry__.py")
 LIVE_DOCS = ("README.md", os.path.join(".claude", "skills", "verify", "SKILL.md"))
 
 _WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+# Longest CREATE FUNCTION text register_all may issue. Spark parses and
+# analyses a body at CREATE time and again inside every caller, so a
+# body unrolled per argument value or re-inlined at each use costs
+# seconds of set-up per function.
+MAX_FUNCTION_TEXT = 8_000
+_FUNCTION_NAME = re.compile(r"FUNCTION\s+(\w+)")
 
 
 def _py_files(rel: str) -> list[str]:
@@ -113,3 +123,16 @@ def _looks_like_repo_path(token: str) -> bool:
     if "/" in token:
         return bool(re.fullmatch(r"[\w.\-/]+", token))
     return bool(re.fullmatch(r"[\w\-]+\.(py|md|json|toml|cfg|txt)", token))
+
+
+def test_registered_function_bodies_stay_small(spark):
+    from heavydb_spark.functions import register_all
+
+    texts: list[str] = []
+    register_all(SimpleNamespace(
+        sql=texts.append, udf=SimpleNamespace(register=lambda name, f: None)))
+    big = [
+        f"{_FUNCTION_NAME.search(t).group(1)}: {len(t)} characters"
+        for t in texts if len(t) > MAX_FUNCTION_TEXT
+    ]
+    assert texts and not big, "function bodies too long:\n" + "\n".join(big)
