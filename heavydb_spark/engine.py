@@ -15,8 +15,8 @@ from __future__ import annotations
 
 import re
 import threading
-from contextlib import contextmanager, nullcontext
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1234,12 +1234,13 @@ _WRAPPER_FORMATS = {
 }
 
 
-# Engine.sql_arrow's profile for a statement whose input fits in one
-# broadcast: a static plan over one shuffle partition.
-_SMALL_PROFILE = {
-    "spark.sql.adaptive.enabled": "false",
-    "spark.sql.shuffle.partitions": "1",
-}
+# Leaves that Engine.sql_arrow reads through one partition when a
+# statement's input fits in one broadcast. LocalRelation and
+# OneRowRelation are not among them: Catalyst folds those on the driver.
+_SCAN_LEAVES = frozenset({
+    "LogicalRelation", "InMemoryRelation", "LogicalRDD",
+    "DataSourceV2Relation",
+})
 
 
 class Engine:
@@ -1283,13 +1284,6 @@ class Engine:
         # (tests/test_concurrency.py); the cache dict needs a lock or
         # an invalidating writer races a caching reader.
         self._result_cache_lock = threading.Lock()
-        # sql_arrow plans under this lock, its small-statement conf flip
-        # included. The statements of sql that are not lazy reads (conf
-        # writes, DDL, DML and their eager jobs) are counted under it,
-        # and sql_arrow skips the flip while any runs: a flip never
-        # overlaps one, and no statement waits for a write.
-        self._plan_lock = threading.Lock()
-        self._eager_statements = 0
 
     @classmethod
     def local(cls, **kwargs) -> "Engine":
@@ -1449,34 +1443,20 @@ class Engine:
         and return a one-row `rows_affected` DataFrame.
         """
         kind, m, read_only = _classify(query)
-        lazy_read = kind == "query" and read_only
-        with nullcontext() if lazy_read else self._eager_statement():
-            # CREATE IF NOT EXISTS over a pre-existing table no-ops — the
-            # live registry entry (if any) must survive, so existence is
-            # captured BEFORE execution (r12 advice: registry lifecycle)
-            skip_sync = False
-            if kind in _CREATE_TABLE_KINDS and m["ine"]:
-                try:
-                    skip_sync = self.spark.catalog.tableExists(
-                        m["table"].strip('`"'))
-                except Exception:
-                    skip_sync = False
-            out = self._sql_impl(query, kind, m, read_only)
-            if not skip_sync:
-                self._time_registry_sync(kind, m)
-            return out
-
-    @contextmanager
-    def _eager_statement(self):
-        """Count a running statement that writes confs or runs jobs
-        eagerly; sql_arrow plans without its profile meanwhile."""
-        with self._plan_lock:
-            self._eager_statements += 1
-        try:
-            yield
-        finally:
-            with self._plan_lock:
-                self._eager_statements -= 1
+        # CREATE IF NOT EXISTS over a pre-existing table no-ops — the
+        # live registry entry (if any) must survive, so existence is
+        # captured BEFORE execution (r12 advice: registry lifecycle)
+        skip_sync = False
+        if kind in _CREATE_TABLE_KINDS and m["ine"]:
+            try:
+                skip_sync = self.spark.catalog.tableExists(
+                    m["table"].strip('`"'))
+            except Exception:
+                skip_sync = False
+        out = self._sql_impl(query, kind, m, read_only)
+        if not skip_sync:
+            self._time_registry_sync(kind, m)
+        return out
 
     def _time_registry_sync(self, kind: str, m: re.Match | None) -> None:
         """Post-success maintenance of the declared-TIME column
@@ -2191,16 +2171,7 @@ class Engine:
             types = state["types"]
             toks = set(re.findall(r"[a-z_][a-z0-9_$]*", context.lower()))
             try:
-                # SHOW TABLES, not catalog.listTables(): same name set
-                # (verified), but ~12x cheaper — listTables builds a
-                # full Table descriptor per entry and this resolver
-                # runs on every statement containing '/', CAST, ST_*,
-                # CONCAT or REVERSE (r14; 0.51 s -> 0.02 s of the q67
-                # head's per-run build).
-                names = [
-                    r.tableName
-                    for r in self.spark.sql("SHOW TABLES").collect()
-                ]
+                names = self._table_names()
             except Exception:
                 names = []
             for nm in names:
@@ -2422,6 +2393,17 @@ class Engine:
                 raise state["err"]
             return state["df"]
         return df
+
+    def _table_names(self) -> list[str]:
+        """The names SHOW TABLES lists: the current database's tables
+        and the local temp views. Read from the JVM session catalog,
+        which returns bare identifiers; SHOW TABLES runs a statement
+        and Python's catalog.listTables() builds a full descriptor per
+        entry, and this runs for every statement that builds the type
+        resolver."""
+        catalog = self.spark._jsparkSession.sessionState().catalog()
+        tables = catalog.listTables(catalog.getCurrentDatabase())
+        return [tables.apply(i).table() for i in range(tables.size())]
 
     def _is_temp_view(self, name: str) -> bool:
         short = name.split(".")[-1]
@@ -3834,68 +3816,77 @@ class Engine:
     def sql_arrow(self, query: str):
         """Execute and return an Arrow table (Arrow IPC result surface).
 
-        The one surface that both builds and executes a statement, so it
-        picks the physical profile per statement. A statement whose
-        optimized-plan leaves (those of its subqueries included) total
-        at most the session's `spark.sql.autoBroadcastJoinThreshold`
-        (when > 0) is small. It is planned with AQE off and one shuffle
-        partition: one static job chain instead of AQE's query-stage
-        jobs, as HeavyDB runs a dashboard SELECT as one kernel per step
-        and one reduction (Execute.cpp:1696). The root size estimate is
-        not used: it multiplies join sides. The cutoff reuses the
-        broadcast threshold, so tuning that conf also moves it, and -1
-        turns both off. The benchmark's dashboard statements read at
-        most about 1 MB, and no benchmark workload sends statements
-        between that and the 10 MB default or above it; off-benchmark
-        probes on 1-9 MB parquet inputs found the profile no slower
-        than the AQE plan.
+        A small read-only query runs one stage per job, as HeavyDB runs a
+        dashboard SELECT as one kernel per fragment and one reduction
+        (Execute.cpp:1696). The input is small when the leaves of the
+        frame's plan, with cached data substituted and CTEs inlined
+        (subqueries' leaves included), total at most the session's
+        `spark.sql.autoBroadcastJoinThreshold`; -1 turns the cutoff off
+        with broadcast joins. Leaves before optimization are never
+        smaller than after it, and the root estimate is not used: it
+        multiplies join sides. Each scan leaf of a small query is read
+        through one partition (`Repartition(1, shuffle=false)`, a
+        coalesce), so every operator above it sees `SinglePartition` and
+        the planner adds no exchange for an aggregate, a global sort or a
+        sort-merge join; a broadcast side or a subquery still runs as a
+        job of its own. The optimizer runs once, on the wrapped plan, and
+        AQE stays on. No session conf is written: `sql`, EXPLAIN, the
+        result cache and the DataFrame builders keep their plans, and
+        concurrent callers share nothing.
 
-        Only planning holds the engine's plan lock: the confs are
-        flipped, the plan fixed and the saved values restored inside it,
-        and default-path planning takes it too. `sql` builds the frame
-        before it and `toArrow()` executes the fixed plan after it. While
-        `sql` runs a statement that is not a read-only query (an ALTER
-        SESSION / SET conf write, DDL, DML and their eager jobs), small
-        statements plan on the default path instead of waiting for it,
-        so the restore never undoes a conf write and no eager job plans
-        under the flip. `sql`, EXPLAIN, the result cache and the
-        DataFrame builders keep the AQE plan; a lazy DataFrame that
-        another thread builds or acts on while a flip is live may get
-        the profile: the same result, a different physical plan.
+        A small query scans its input in one task. On a 2-core local
+        session over four-file parquet inputs, two group-by statements
+        ran 13-15% faster than the unwrapped AQE plan at 1 MB, and they
+        and a top-k ran 17-95% slower at 5 and 9 MB; the benchmark's
+        dashboard statements read at most about 1 MB.
         """
         df = self.sql(query)
-        qe = df._jdf.queryExecution()
-        small = self._small_input(qe)
-        with self._plan_lock:
-            profile = {} if self._eager_statements or not small \
-                else _SMALL_PROFILE
-            saved = {k: self.spark.conf.get(k) for k in profile}
-            try:
-                for k, v in profile.items():
-                    self.spark.conf.set(k, v)
-                qe.executedPlan()
-            finally:
-                for k, v in saved.items():
-                    self.spark.conf.set(k, v)
+        kind, _, read_only = _classify(query)
+        if kind == "query" and read_only:
+            plan = self._one_partition_plan(df._jdf.queryExecution())
+            if plan is not None:
+                df = DataFrame(self._jvm_class(
+                    "org.apache.spark.sql.classic.Dataset").ofRows(
+                        self.spark._jsparkSession, plan), self.spark)
         return df.toArrow()
 
     def _small_input(self, qe) -> bool:
-        """Whether the leaves of `qe`'s optimized plan and of its
-        subqueries total at most autoBroadcastJoinThreshold bytes."""
+        """Whether sql_arrow reads `qe`'s scans through one partition."""
+        return self._one_partition_plan(qe) is not None
+
+    def _one_partition_plan(self, qe):
+        """`qe`'s plan with cached data (commands run, cache hits
+        substituted) and CTEs inlined as the optimizer would, each scan
+        leaf of it and of its subqueries wrapped in Repartition(1,
+        false); None when those leaves total more than
+        autoBroadcastJoinThreshold bytes or the threshold is off."""
         limit = self.spark._jsparkSession.sessionState().conf() \
             .autoBroadcastJoinThreshold()
         if limit <= 0:
-            return False
-        plan = qe.optimizedPlan()
+            return None
+        plan = self._jvm_class(
+            "org.apache.spark.sql.catalyst.optimizer.InlineCTE")(
+                False, False).apply(qe.withCachedData())
+        repartition = self._jvm_class(
+            "org.apache.spark.sql.catalyst.plans.logical.Repartition")
+        wrapped = self._jvm_class("java.util.HashMap")()
         subs = plan.subqueriesAll()
         total = 0
         for p in [plan] + [subs.apply(i) for i in range(subs.size())]:
             leaves = p.collectLeaves()
             for i in range(leaves.size()):
-                total += leaves.apply(i).stats().sizeInBytes()
+                leaf = leaves.apply(i)
+                total += leaf.stats().sizeInBytes()
                 if total > limit:
-                    return False
-        return True
+                    return None
+                if leaf.nodeName() in _SCAN_LEAVES:
+                    wrapped.put(leaf, repartition(1, False, leaf))
+        return plan.transformUpWithSubqueries(self._jvm_class(
+            "org.apache.spark.api.python.PythonUtils").toScalaMap(wrapped))
+
+    def _jvm_class(self, name: str) -> JavaClass:
+        # by name: py4j's `jvm.a.b.C` costs a JVM round trip per part
+        return JavaClass(name, self.spark._jvm._gateway_client)
 
     def _explain_statement(self, kind: str | None, inner: str) -> DataFrame:
         """EXPLAIN ... as a SQL statement: one `Explanation` STRING row,
@@ -3920,9 +3911,7 @@ class Engine:
     def explain(self, query: str, mode: str = "formatted") -> str:
         """EXPLAIN surface (reference: EXPLAIN / EXPLAIN CALCITE
         statements, ParserWrapper.h) — returns the physical plan."""
-        df = self.sql(query)
-        with self._plan_lock:  # never sql_arrow's small-statement plan
-            return _explain_text(df, mode)
+        return _explain_text(self.sql(query), mode)
 
     def stop(self) -> None:
         self.spark.stop()

@@ -261,8 +261,8 @@ def test_result_recycler_evicted_entry_recomputes(engine, spark):
         engine._invalidate_result_cache()
 
 
-# Engine.sql_arrow statements: seven small ones that take the static
-# one-partition profile, and one whose range() leaf (16 MB) is above the
+# Engine.sql_arrow statements: seven small ones whose scans it reads
+# through one partition, and one whose range() leaf (16 MB) is above the
 # broadcast threshold and keeps the default AQE plan.
 ARROW_SLICE = [
     "SELECT l_returnflag, COUNT(*) AS n, SUM(l_quantity) AS qty "
@@ -289,7 +289,7 @@ ARROW_SLICE = [
 def test_sql_arrow_parallel_matches_sequential(engine, spark):
     """8 threads in Engine.sql_arrow at once return the sequential
     results and leave AQE and the shuffle partition count as they were
-    (the small profile's conf flip is held under the plan lock)."""
+    (sql_arrow changes a small statement's plan, never a session conf)."""
     confs = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     before = [spark.conf.get(k) for k in confs]
     assert [engine._small_input(engine.sql(t)._jdf.queryExecution())
@@ -309,10 +309,8 @@ def test_sql_arrow_parallel_matches_sequential(engine, spark):
 
 def test_alter_session_survives_concurrent_sql_arrow(engine, spark):
     """ALTER SESSION SET spark.sql.shuffle.partitions, raced against
-    sql_arrow calls that flip and restore that conf, is never undone:
-    SET reads back each value written, and the last one stays. Engine.sql
-    runs both statements under the lock sql_arrow holds while its
-    profile is live."""
+    sql_arrow calls, is never undone: SET reads back each value written,
+    and the last one stays, because sql_arrow writes no session conf."""
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key), spark.conf.get("spark.sql.adaptive.enabled")
     small = ARROW_SLICE[:7]

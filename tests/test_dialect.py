@@ -367,6 +367,36 @@ def test_show_and_alter_passthrough(engine):
         spark.sql("DROP TABLE IF EXISTS alter_demo2")
 
 
+def test_type_resolver_table_names_match_show_tables(engine):
+    """The type resolver reads table names from the JVM session catalog.
+    They must be the names SHOW TABLES lists: the current database's
+    managed tables and the temp views, not another database's tables
+    and not the global temp views."""
+    spark = engine.spark
+    drops = ("DROP TABLE IF EXISTS names_managed",
+             "DROP TABLE IF EXISTS names_other_db.names_elsewhere",
+             "DROP DATABASE IF EXISTS names_other_db",
+             "DROP VIEW IF EXISTS names_temp_view",
+             "DROP VIEW IF EXISTS global_temp.names_global_view")
+    for d in drops:
+        spark.sql(d)
+    try:
+        spark.range(1).createOrReplaceTempView("names_temp_view")
+        spark.sql("CREATE TABLE names_managed (a INT)")
+        spark.sql("CREATE DATABASE names_other_db")
+        spark.sql("CREATE TABLE names_other_db.names_elsewhere (a INT)")
+        spark.range(1).createOrReplaceGlobalTempView("names_global_view")
+        names = engine._table_names()
+        assert len(names) == len(set(names))
+        shown = {r.tableName for r in spark.sql("SHOW TABLES").collect()}
+        assert set(names) == shown
+        assert {"names_temp_view", "names_managed"} <= shown
+        assert not {"names_elsewhere", "names_global_view"} & shown
+    finally:
+        for d in drops:
+            spark.sql(d)
+
+
 def test_supported_ml_frameworks(spark):
     from heavydb_spark.operators.ml import supported_ml_frameworks
 

@@ -1,14 +1,15 @@
-"""The small-statement profile of `Engine.sql_arrow`, and the session
-helpers next to the confs it writes.
+"""The one-partition plan of small `Engine.sql_arrow` statements, and the
+session helpers next to it.
 
-A statement whose optimized-plan leaves total at most the session's
-`spark.sql.autoBroadcastJoinThreshold` is planned with AQE off and one
-shuffle partition, then executed outside the engine's plan lock. These
-tests pin that the profile changes only the physical plan (the
-config-differential pattern of spark-rapids'
-`assert_gpu_and_cpu_are_equal_collect`: one query, two configurations,
-equal collected results), that it never leaks into the session's confs,
-and that it is scoped to `sql_arrow`.
+A read-only query whose input leaves total at most the session's
+`spark.sql.autoBroadcastJoinThreshold` reads each scan leaf through one
+partition, so its plan needs no shuffle. These tests pin that the wrap
+changes only the physical plan (the config-differential pattern of
+spark-rapids' `assert_gpu_and_cpu_are_equal_collect`: one query, two
+configurations, equal collected results), that it writes no session
+conf, that it is scoped to `sql_arrow`'s read-only queries, and that it
+keeps the result cache, commands, driver-folded literals, subqueries and
+hints working.
 """
 
 from __future__ import annotations
@@ -17,6 +18,8 @@ import datetime
 import inspect
 import os
 import re
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from types import SimpleNamespace
 
@@ -159,8 +162,8 @@ def _arrow(table, cols=None):
 
 
 def _differential(engine, spark, text, cols=None):
-    """`text` through sql_arrow on the small profile and with it off
-    (a non-positive threshold disables it): both canonical results."""
+    """`text` through sql_arrow with its scans wrapped and with the wrap
+    off (a non-positive threshold disables it): both canonical results."""
     assert engine._small_input(engine.sql(text)._jdf.queryExecution())
     small = _arrow(engine.sql_arrow(text), cols)
     with _conf(spark, THRESHOLD, "-1"):
@@ -223,72 +226,64 @@ def test_confs_restored_after_success(engine, spark):
         spark.conf.set(SHUFFLE, before[1])
 
 
-def test_confs_restored_when_planning_fails(engine, spark, monkeypatch):
-    """A failure while the profile is live restores both confs and
-    releases the plan lock."""
-    from heavydb_spark.engine import Engine
-
-    before = _profile_confs(spark)
-    seen = []
-
-    def failing_plan():
-        seen.append(_profile_confs(spark))
-        raise RuntimeError("planning failed")
-
-    query_execution = SimpleNamespace(executedPlan=failing_plan)
-    frame = SimpleNamespace(_jdf=SimpleNamespace(
-        queryExecution=lambda: query_execution))
-    monkeypatch.setattr(Engine, "sql", lambda self, q: frame)
-    monkeypatch.setattr(Engine, "_small_input", lambda self, qe: True)
-    with pytest.raises(RuntimeError, match="planning failed"):
-        engine.sql_arrow("SELECT 1")
-    monkeypatch.undo()
-    assert seen == [("false", "1")]
-    assert _profile_confs(spark) == before
-    assert engine.sql_arrow("SELECT 1 AS one").to_pylist() == [{"one": 1}]
+def test_concurrent_sql_arrow_writes_no_conf(engine, spark):
+    """Eight sql_arrow calls at once leave every session conf as it was."""
+    before = spark.conf.getAll
+    with ThreadPoolExecutor(max_workers=len(DASHBOARD)) as pool:
+        tables = list(pool.map(engine.sql_arrow, DASHBOARD.values(),
+                               timeout=300))
+    assert all(t.num_rows for t in tables)
+    assert spark.conf.getAll == before
 
 
-# -- plan scope ------------------------------------------------------------
+# -- plan shape ------------------------------------------------------------
 
-_PARTITIONING_RE = re.compile(r"(?:hash|range)partitioning\(.*?, (\d+)\)")
+# a ShuffleExchangeExec node; a BroadcastExchange is not a shuffle
+_SHUFFLE_RE = re.compile(r"\bExchange\b")
 
 
-def _delivered_plan(engine, monkeypatch, text) -> str:
-    """The physical plan sql_arrow executed for `text`."""
-    from heavydb_spark.engine import Engine
+def _delivered_plan(engine, text) -> str:
+    """The physical plan of the frame whose toArrow() sql_arrow ran."""
+    from pyspark.sql.classic.dataframe import DataFrame
 
     frames = []
-    sql = Engine.sql
-    monkeypatch.setattr(
-        Engine, "sql",
-        lambda self, q: frames.append(sql(self, q)) or frames[-1])
-    engine.sql_arrow(text)
-    monkeypatch.undo()
+    to_arrow = DataFrame.toArrow
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrame, "toArrow",
+                   lambda self: frames.append(self) or to_arrow(self))
+        engine.sql_arrow(text)
     return frames[-1]._jdf.queryExecution().executedPlan().toString()
 
 
-def test_small_statement_plans_static_one_partition(engine, monkeypatch):
-    plan = _delivered_plan(engine, monkeypatch, DASHBOARD["filter_groupby"])
-    assert "AdaptiveSparkPlan" not in plan
-    counts = _PARTITIONING_RE.findall(plan)
-    assert counts and set(counts) == {"1"}, plan
+def _stages_per_job(spark, engine, text) -> list[int]:
+    """Stage count of each Spark job sql_arrow ran for `text`."""
+    sc = spark.sparkContext
+    group = f"small_profile_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "stage count")
+    try:
+        engine.sql_arrow(text)
+    finally:
+        sc.setJobGroup("", "")
+    tracker = sc.statusTracker()
+    return [len(tracker.getJobInfo(j).stageIds)
+            for j in tracker.getJobIdsForGroup(group)]
 
 
-def test_statement_above_threshold_keeps_aqe(engine, spark, monkeypatch):
+@pytest.mark.parametrize("name", sorted(DASHBOARD))
+def test_small_statement_runs_one_stage_per_job(engine, spark, name):
+    plan = _delivered_plan(engine, DASHBOARD[name])
+    assert not _SHUFFLE_RE.search(plan), plan
+    assert "Coalesce 1" in plan, plan
+    stages = _stages_per_job(spark, engine, DASHBOARD[name])
+    assert stages and set(stages) == {1}, stages
+
+
+def test_statement_above_threshold_keeps_parallel_scan(engine, spark):
     with _conf(spark, THRESHOLD, "1"):  # below any fixture file's bytes
-        plan = _delivered_plan(
-            engine, monkeypatch, DASHBOARD["filter_groupby"])
+        plan = _delivered_plan(engine, DASHBOARD["filter_groupby"])
     assert plan.startswith("AdaptiveSparkPlan"), plan
-
-
-def test_profile_skipped_while_eager_statement_runs(engine, monkeypatch):
-    """While Engine.sql runs a conf write, DDL or DML, a small
-    statement plans on the default AQE path instead of waiting."""
-    with engine._eager_statement():
-        plan = _delivered_plan(
-            engine, monkeypatch, DASHBOARD["filter_groupby"])
-    assert plan.startswith("AdaptiveSparkPlan"), plan
-    assert engine._eager_statements == 0
+    assert "Coalesce" not in plan, plan
+    assert _SHUFFLE_RE.search(plan), plan
 
 
 def test_engine_sql_keeps_aqe(engine):
@@ -296,3 +291,60 @@ def test_engine_sql_keeps_aqe(engine):
     engine.sql_arrow(text)
     plan = engine.sql(text)._jdf.queryExecution().executedPlan().toString()
     assert plan.startswith("AdaptiveSparkPlan"), plan
+    assert "Coalesce" not in plan, plan
+
+
+# -- what the wrap must leave working --------------------------------------
+
+
+def test_result_cache_hit_reads_the_cache(engine):
+    text = DASHBOARD["region_join"]
+    try:
+        engine.sql("ALTER SESSION SET RESULT_CACHE='on'")
+        first = _arrow(engine.sql_arrow(text))
+        plan = _delivered_plan(engine, text)
+        assert "InMemoryTableScan" in plan, plan
+        assert _arrow(engine.sql_arrow(text)) == first
+    finally:
+        engine.sql("ALTER SESSION SET RESULT_CACHE='off'")
+        engine._invalidate_result_cache()
+
+
+def test_insert_through_sql_arrow_runs_once(engine, spark):
+    spark.sql("DROP TABLE IF EXISTS arrow_insert_once")
+    try:
+        engine.sql("CREATE TABLE arrow_insert_once (x INT)")
+        engine.sql_arrow("INSERT INTO arrow_insert_once VALUES (1), (2)")
+        assert spark.table("arrow_insert_once").count() == 2
+    finally:
+        spark.sql("DROP TABLE IF EXISTS arrow_insert_once")
+
+
+@pytest.mark.parametrize("text", [
+    "SELECT 1 AS one",
+    "VALUES (1, 'a'), (2, 'b')",
+])
+def test_driver_folded_statement_is_not_wrapped(engine, spark, text):
+    """A LocalRelation or OneRowRelation leaf stays unwrapped. The only
+    job is the one toArrow() always runs to collect Arrow batches (one
+    stage, one task): the wrap adds none."""
+    plan = _delivered_plan(engine, text)
+    assert "Coalesce" not in plan, plan
+    assert _stages_per_job(spark, engine, text) == [1]
+
+
+def test_scalar_subquery_differential(engine, spark):
+    text = ("SELECT n_name, n_regionkey FROM nation WHERE n_regionkey = "
+            "(SELECT MAX(r_regionkey) FROM region WHERE r_name < 'E')")
+    small, default = _differential(engine, spark, text)
+    assert small == default
+    assert small[1]
+
+
+def test_keep_result_hint_through_sql_arrow(engine):
+    text = ("SELECT /*+ keep_result */ n_regionkey, COUNT(*) AS n "
+            "FROM nation GROUP BY n_regionkey")
+    got = _arrow(engine.sql_arrow(text))
+    want = engine.sql(text)
+    assert got == _by_name(want.columns, want.collect())
+    assert len(got[1]) == 5
