@@ -8,7 +8,8 @@ both the DataFrame API and `engine.sql` can reach it.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
+from pyspark.sql import functions as F
 
 from heavydb_spark.functions.strings import register_string_functions
 from heavydb_spark.functions.arrays import register_array_functions
@@ -50,13 +51,25 @@ def register_all(spark: SparkSession) -> None:
         pass
 
 
+def _call(name: str, *args) -> Column:
+    """Call a function `register_all` registers, so its arguments are
+    bound once and its body stays codegen'd. The Column builders of the
+    H3 and transform families all build through here. Registers on
+    `SparkSession.active()` first (memoized per session); a Column used
+    on another session needs `register_all(that_session)`, which
+    `Engine(session)` already does. Spark cannot pass a lambda variable
+    to a SQL function, so these Columns do not resolve inside a
+    higher-order function's lambda (`F.transform` over a ring): apply
+    them to a column, e.g. after an explode."""
+    register_all(SparkSession.active())
+    return F.call_function(name, *args)
+
+
 def single_value(col):
     """SINGLE_VALUE aggregate (sqldefs.h:85): the group's value, erroring
     if the group holds more than one distinct value — the runtime check
     the reference's planner inserts under scalar subqueries. JVM-side:
     raise_error fires inside codegen, no UDF."""
-    from pyspark.sql import functions as F
-
     return F.when(
         F.count_distinct(col) > 1,
         F.raise_error(F.lit("more than one row returned by SINGLE_VALUE")),

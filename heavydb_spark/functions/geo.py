@@ -15,9 +15,15 @@ strings.
 
 from __future__ import annotations
 
+import math
+from types import SimpleNamespace
+
 import pandas as pd  # noqa: F401 - resolves pandas_udf type hints
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from heavydb_spark import functions as _functions
+from heavydb_spark.functions.render import _E, _SqlB
 
 EARTH_RADIUS_M = 6372797.560856  # the reference's exact haversine
 # radius (ExtensionFunctions.hpp distance_in_meters:445)
@@ -488,8 +494,6 @@ def st_buffer_point(
     vertices — the buffered ring composes with every polygon operator
     here (area/perimeter/contains), and the approximation error is the
     standard circle-to-n-gon sagitta (~r·(1-cos(pi/n)))."""
-    import math
-
     two_pi = 2 * math.pi
     ring = F.transform(
         F.sequence(F.lit(0), F.lit(n_segments - 1)),
@@ -692,91 +696,22 @@ def st_geomfromtext_multipoint(wkt: Column) -> Column:
 
 # ------------------------------------------------------ general transform
 #
-# ST_Transform beyond the 4326<->900913 pair: WGS-84 -> UTM zone
-# (EPSG 326xx) via the Gauss-Krueger/transverse-Mercator series
-# (3rd order in the third flattening n — sub-mm over a UTM zone).
+# ST_Transform beyond the 4326<->900913 pair: WGS-84 <-> any
+# transverse-Mercator CRS of the EPSG table below via the Gauss-Krueger
+# series (3rd order in the third flattening n — sub-mm over a UTM
+# zone), plus the Helmert datum shift for CRSs that declare one.
 # Reference surface: the ST_Transform overloads of
 # QueryEngine/ExtensionFunctionsGeo.hpp (arbitrary SRID via proj);
-# here the projection math is closed-form so the same formula can run
-# as a Spark Column expression AND as oracle SQL text. Both variants
-# are generated from ONE formula over a tiny two-backend expression
-# builder, so the floating-point operation structure is identical and
-# results hash-match at 6 decimals.
+# here the projection math is closed-form. Each formula is written once
+# over the SQL-text backend and takes its per-CRS constants as values:
+# - registered with the constants as arguments (register_geo_functions),
+#   it is what every Column builder calls, so a composed input is bound
+#   once, like the reference's EXTENSION_NOINLINE functions;
+# - with the constants inlined as literals it is the `*_sql` text the
+#   DuckDB oracles run, with the identical floating-point operation tree.
 
 _WGS84_A = 6378137.0
 _WGS84_F = 1.0 / 298.257223563
-_UTM_K0 = 0.9996
-_UTM_E0 = 500000.0
-
-
-class _SqlExpr:
-    """String-building backend: arithmetic on parenthesized SQL text."""
-
-    def __init__(self, s: str):
-        self.s = f"({s})"
-
-    def _b(self, op, o):
-        o = o.s if isinstance(o, _SqlExpr) else repr(float(o))
-        return _SqlExpr(f"{self.s} {op} {o}")
-
-    def _rb(self, op, o):
-        o = o.s if isinstance(o, _SqlExpr) else repr(float(o))
-        return _SqlExpr(f"{o} {op} {self.s}")
-
-    def __add__(self, o):
-        return self._b("+", o)
-
-    def __radd__(self, o):
-        return self._rb("+", o)
-
-    def __sub__(self, o):
-        return self._b("-", o)
-
-    def __rsub__(self, o):
-        return self._rb("-", o)
-
-    def __mul__(self, o):
-        return self._b("*", o)
-
-    def __rmul__(self, o):
-        return self._rb("*", o)
-
-    def __truediv__(self, o):
-        return self._b("/", o)
-
-    def __rtruediv__(self, o):
-        return self._rb("/", o)
-
-    def __neg__(self):
-        return _SqlExpr(f"-{self.s}")
-
-
-class _SqlOps:
-    @staticmethod
-    def fn(name):
-        return lambda x: _SqlExpr(f"{name}({x.s})")
-
-    def __init__(self):
-        for f in ("sin", "cos", "atan", "asin", "exp", "ln", "sqrt",
-                  "radians", "degrees"):
-            setattr(self, f, self.fn(f))
-
-    @staticmethod
-    def atan2(y, x):
-        return _SqlExpr(f"atan2({y.s}, {x.s})")
-
-
-class _ColOps:
-    sin = staticmethod(F.sin)
-    cos = staticmethod(F.cos)
-    atan = staticmethod(F.atan)
-    asin = staticmethod(F.asin)
-    atan2 = staticmethod(F.atan2)
-    exp = staticmethod(F.exp)
-    ln = staticmethod(F.log)
-    sqrt = staticmethod(F.sqrt)
-    radians = staticmethod(F.radians)
-    degrees = staticmethod(F.degrees)
 
 
 class _Datum:
@@ -788,8 +723,6 @@ class _Datum:
     are public EPSG registry values."""
 
     def __init__(self, a, inv_f, tx, ty, tz, rx_s, ry_s, rz_s, ds_ppm):
-        import math
-
         self.a = float(a)
         self.f = 1.0 / float(inv_f)
         self.tx, self.ty, self.tz = float(tx), float(ty), float(tz)
@@ -813,8 +746,9 @@ class _TMParams:
     origin (lat0, lon0), scale k0, false easting/northing, and an
     optional Helmert datum (None = datum-matches-WGS84, e.g. GRS80
     CRSs treated as coincident, like proj does without a grid). The
-    raw _tm_formula entry points are projection-only; `st_transform`
-    composes the datum step for CRSs that declare one."""
+    raw tm_from_wgs84/tm_to_wgs84 builders are projection-only;
+    the `*_full` builders and `st_transform` add the datum step for
+    CRSs that declare one."""
 
     def __init__(self, a, inv_f, lat0, lon0, k0, e0, n0, datum=None):
         self.a = float(a)
@@ -863,160 +797,310 @@ for _z in range(28, 39):  # ED50 / UTM zones 28N-38N (Hayford + datum)
     )
 
 
-def _tm_coeffs(prm: _TMParams):
+def _tm_constants(srid: int) -> SimpleNamespace:
+    """The per-CRS constants of the forward and inverse series, each
+    folded in Python exactly where the series uses it (ka = k0 * A,
+    km0 = k0 * m0), so the registered and literal forms share one
+    operation tree."""
+    prm = _EPSG_TM[srid]
     n = prm.f / (2.0 - prm.f)
     big_a = (prm.a / (1.0 + n)) * (1.0 + n * n / 4.0 + n**4 / 64.0)
-    return n, big_a
+    a = (n / 2.0 - 2.0 * n * n / 3.0 + 5.0 * n**3 / 16.0,
+         13.0 * n * n / 48.0 - 3.0 * n**3 / 5.0,
+         61.0 * n**3 / 240.0)
+    m0 = 0.0
+    if prm.lat0 != 0.0:
+        # meridian arc length (scaled by A) at the natural-origin latitude
+        c1 = 2.0 * math.sqrt(n) / (1.0 + n)
+        s = math.sin(math.radians(prm.lat0))
+        xi = math.atan(math.sinh(math.atanh(s) - c1 * math.atanh(c1 * s)))
+        north = xi
+        for j, aj in enumerate(a, 1):
+            north += aj * math.sin(2.0 * j * xi)
+        m0 = big_a * north
+    return SimpleNamespace(
+        lon0=prm.lon0, c1=2.0 * (n ** 0.5) / (1.0 + n),
+        a1=a[0], a2=a[1], a3=a[2],
+        b1=n / 2.0 - 2.0 * n * n / 3.0 + 37.0 * n**3 / 96.0,
+        b2=n * n / 48.0 + n**3 / 15.0,
+        b3=17.0 * n**3 / 480.0,
+        d1=2.0 * n - 2.0 * n * n / 3.0 - 2.0 * n**3,
+        d2=7.0 * n * n / 3.0 - 8.0 * n**3 / 5.0,
+        d3=56.0 * n**3 / 15.0,
+        e0=prm.e0, n0=prm.n0, k0=prm.k0, big_a=big_a, m0=m0,
+        ka=prm.k0 * big_a, km0=prm.k0 * m0,
+    )
 
 
-def _tm_m0(prm: _TMParams) -> float:
-    """Meridian arc length (scaled by A) at the natural-origin latitude
-    — a plain-Python constant folded into the series so the SQL text
-    stays free of per-CRS branches."""
-    import math
-
-    if prm.lat0 == 0.0:
-        return 0.0
-    n, big_a = _tm_coeffs(prm)
-    a1 = n / 2.0 - 2.0 * n * n / 3.0 + 5.0 * n**3 / 16.0
-    a2 = 13.0 * n * n / 48.0 - 3.0 * n**3 / 5.0
-    a3 = 61.0 * n**3 / 240.0
-    c1 = 2.0 * math.sqrt(n) / (1.0 + n)
-    phi = math.radians(prm.lat0)
-    s = math.sin(phi)
-    t = math.sinh(math.atanh(s) - c1 * math.atanh(c1 * s))
-    xi = math.atan(t)
-    north = xi
-    for j, aj in ((1, a1), (2, a2), (3, a3)):
-        north += aj * math.sin(2.0 * j * xi)
-    return big_a * north
+def _ellipsoid(a: float, f: float) -> SimpleNamespace:
+    e2 = f * (2.0 - f)
+    b = a * (1.0 - f)
+    return SimpleNamespace(a=a, e2=e2, e2c=1.0 - e2, b=b,
+                           ep2b=e2 / (1.0 - e2) * b, e2a=e2 * a)
 
 
-def _tm_formula(ops, lon, lat, prm: _TMParams):
-    """Transverse-Mercator forward series (Krueger, 3rd order in n) for
-    any _TMParams CRS, written once over either backend. sinh/cosh/
-    atanh are spelled with exp/ln so Spark and DuckDB run the exact
-    same primitive calls."""
-    n, big_a = _tm_coeffs(prm)
-    a1 = n / 2.0 - 2.0 * n * n / 3.0 + 5.0 * n**3 / 16.0
-    a2 = 13.0 * n * n / 48.0 - 3.0 * n**3 / 5.0
-    a3 = 61.0 * n**3 / 240.0
-    c1 = 2.0 * (n ** 0.5) / (1.0 + n)
-    lam0 = prm.lon0
-    m0 = _tm_m0(prm)
+def _helmert_constants(d: _Datum, inverse: bool) -> SimpleNamespace:
+    """Position-vector Helmert LOCAL->WGS84; inverse=True applies the
+    standard negated-parameter reverse (error << 1 mm at these
+    magnitudes)."""
+    sgn = -1.0 if inverse else 1.0
+    return SimpleNamespace(
+        tx=sgn * d.tx, ty=sgn * d.ty, tz=sgn * d.tz, m=1.0 + sgn * d.s,
+        rx=sgn * d.rx, ry=sgn * d.ry, rz=sgn * d.rz)
 
-    def atanh(x):
-        return 0.5 * ops.ln((1.0 + x) / (1.0 - x))
 
-    def sinh(x):
-        return (ops.exp(x) - ops.exp(-x)) / 2.0
+# sinh/cosh/atanh are spelled with exp/ln so Spark and DuckDB run the
+# exact same primitive calls.
+def _sinh(x):
+    return (_SqlB.exp(x) - _SqlB.exp(-x)) / 2.0
 
-    def cosh(x):
-        return (ops.exp(x) + ops.exp(-x)) / 2.0
 
-    phi = ops.radians(lat)
-    lam = ops.radians(lon - lam0)
-    s = ops.sin(phi)
-    t = sinh(atanh(s) - c1 * atanh(c1 * s))
-    xi = ops.atan(t / ops.cos(lam))
-    eta = atanh(ops.sin(lam) / ops.sqrt(1.0 + t * t))
+def _cosh(x):
+    return (_SqlB.exp(x) + _SqlB.exp(-x)) / 2.0
+
+
+def _atanh(x):
+    return 0.5 * _SqlB.ln((1.0 + x) / (1.0 - x))
+
+
+def _tm_conformal(lon, lat, k):
+    """Forward series, stage 1: lon/lat -> tan of the conformal
+    latitude and the longitude offset in radians."""
+    s = _SqlB.sin(_SqlB.radians(lat))
+    t = _sinh(_atanh(s) - k.c1 * _atanh(k.c1 * s))
+    return t, _SqlB.radians(lon - k.lon0)
+
+
+def _tm_xi_eta(t, lam, k):
+    """Forward series, stage 2: -> the Gauss-Schreiber (xi', eta')."""
+    xi = _SqlB.atan(t / _SqlB.cos(lam))
+    eta = _atanh(_SqlB.sin(lam) / _SqlB.sqrt(1.0 + t * t))
+    return xi, eta
+
+
+def _tm_series(xi, eta, k):
+    """Forward series, stage 3: Krueger's 3rd-order sums -> easting,
+    northing."""
     east = eta
     north = xi
-    for j, aj in ((1, a1), (2, a2), (3, a3)):
-        east = east + aj * ops.cos(2.0 * j * xi) * sinh(2.0 * j * eta)
-        north = north + aj * ops.sin(2.0 * j * xi) * cosh(2.0 * j * eta)
-    return (
-        prm.e0 + prm.k0 * big_a * east,
-        prm.n0 + prm.k0 * (big_a * north - m0),
-    )
+    for j, aj in ((1, k.a1), (2, k.a2), (3, k.a3)):
+        east = east + aj * _SqlB.cos(2.0 * j * xi) * _sinh(2.0 * j * eta)
+        north = north + aj * _SqlB.sin(2.0 * j * xi) * _cosh(2.0 * j * eta)
+    return k.e0 + k.ka * east, k.n0 + k.k0 * (k.big_a * north - k.m0)
 
 
-def _utm_formula(ops, lon, lat, zone: int):
-    """UTM-north specialization of _tm_formula (kept for the existing
-    Column/SQL entry points)."""
-    return _tm_formula(ops, lon, lat, _EPSG_TM[32600 + zone])
-
-
-def utm_from_wgs84(lon: Column, lat: Column, zone: int) -> Column:
-    """ST_Transform(point, EPSG 326xx): WGS-84 lon/lat -> UTM easting/
-    northing (northern-hemisphere false northing 0) as struct<x,y>."""
-    e, nn = _utm_formula(_ColOps(), lon.cast("double"), lat.cast("double"), zone)
-    return F.struct(e.alias("x"), nn.alias("y"))
-
-
-def utm_from_wgs84_sql(lon_expr: str, lat_expr: str, zone: int) -> tuple[str, str]:
-    """The ANSI-SQL text of `utm_from_wgs84` (for DuckDB oracles)."""
-    e, nn = _utm_formula(_SqlOps(), _SqlExpr(lon_expr), _SqlExpr(lat_expr), zone)
-    return e.s, nn.s
-
-
-def _tm_inverse_formula(ops, easting, northing, prm: _TMParams):
-    """Inverse transverse-Mercator series (3rd order in n) for any
-    _TMParams CRS — the other direction of ExtensionFunctionsGeo.hpp's
-    ST_Transform overloads."""
-    n, big_a = _tm_coeffs(prm)
-    b1 = n / 2.0 - 2.0 * n * n / 3.0 + 37.0 * n**3 / 96.0
-    b2 = n * n / 48.0 + n**3 / 15.0
-    b3 = 17.0 * n**3 / 480.0
-    d1 = 2.0 * n - 2.0 * n * n / 3.0 - 2.0 * n**3
-    d2 = 7.0 * n * n / 3.0 - 8.0 * n**3 / 5.0
-    d3 = 56.0 * n**3 / 15.0
-    lam0 = prm.lon0
-    m0 = _tm_m0(prm)
-
-    def sinh(x):
-        return (ops.exp(x) - ops.exp(-x)) / 2.0
-
-    def cosh(x):
-        return (ops.exp(x) + ops.exp(-x)) / 2.0
-
-    xi = (northing - prm.n0 + prm.k0 * m0) / (prm.k0 * big_a)
-    eta = (easting - prm.e0) / (prm.k0 * big_a)
+def _tm_inverse_xi_eta(easting, northing, k):
+    """Inverse series, stage 1: easting, northing -> (xi', eta')."""
+    xi = (northing - k.n0 + k.km0) / k.ka
+    eta = (easting - k.e0) / k.ka
     xi_p = xi
     eta_p = eta
-    for j, bj in ((1, b1), (2, b2), (3, b3)):
-        xi_p = xi_p - bj * ops.sin(2.0 * j * xi) * cosh(2.0 * j * eta)
-        eta_p = eta_p - bj * ops.cos(2.0 * j * xi) * sinh(2.0 * j * eta)
-    chi = ops.asin(ops.sin(xi_p) / cosh(eta_p))
+    for j, bj in ((1, k.b1), (2, k.b2), (3, k.b3)):
+        xi_p = xi_p - bj * _SqlB.sin(2.0 * j * xi) * _cosh(2.0 * j * eta)
+        eta_p = eta_p - bj * _SqlB.cos(2.0 * j * xi) * _sinh(2.0 * j * eta)
+    return xi_p, eta_p
+
+
+def _tm_inverse_lonlat(xi_p, eta_p, k):
+    """Inverse series, stage 2: (xi', eta') -> lon, lat."""
+    chi = _SqlB.asin(_SqlB.sin(xi_p) / _cosh(eta_p))
     phi = chi
-    for j, dj in ((1, d1), (2, d2), (3, d3)):
-        phi = phi + dj * ops.sin(2.0 * j * chi)
-    lam = ops.atan(sinh(eta_p) / ops.cos(xi_p))
+    for j, dj in ((1, k.d1), (2, k.d2), (3, k.d3)):
+        phi = phi + dj * _SqlB.sin(2.0 * j * chi)
+    lam = _SqlB.atan(_sinh(eta_p) / _SqlB.cos(xi_p))
+    return k.lon0 + _SqlB.degrees(lam), _SqlB.degrees(phi)
+
+
+# --------------------------------------------------------- datum shifts
+#
+# Helmert 7-parameter datum transformation for CRSs whose datum is not
+# WGS-84-coincident (27700/OSGB36, 230xx/ED50): geodetic (h=0) ->
+# geocentric XYZ -> position-vector Helmert -> geodetic on the other
+# ellipsoid (Bowring's closed single-step inverse, sub-mm at h=0).
+# The reference applies exactly this via proj's +towgs84 parameters.
+
+
+def _geodetic_to_xyz(lon, lat, g):
+    phi = _SqlB.radians(lat)
+    lam = _SqlB.radians(lon)
+    s = _SqlB.sin(phi)
+    big_n = g.a / _SqlB.sqrt(1.0 - g.e2 * s * s)
     return (
-        lam0 + ops.degrees(lam),
-        ops.degrees(phi),
+        big_n * _SqlB.cos(phi) * _SqlB.cos(lam),
+        big_n * _SqlB.cos(phi) * _SqlB.sin(lam),
+        big_n * g.e2c * s,
     )
 
 
-def _utm_inverse_formula(ops, easting, northing, zone: int):
-    """UTM-north specialization of _tm_inverse_formula."""
-    return _tm_inverse_formula(ops, easting, northing, _EPSG_TM[32600 + zone])
+def _helmert(x, y, z, h):
+    return (
+        h.tx + h.m * (x - h.rz * y + h.ry * z),
+        h.ty + h.m * (h.rz * x + y - h.rx * z),
+        h.tz + h.m * (-(h.ry * x) + h.rx * y + z),
+    )
+
+
+def _xyz_to_geodetic(x, y, z, g):
+    """Bowring's closed-form geocentric -> geodetic (lat, lon only —
+    height is discarded; input points are surface coordinates)."""
+    p = _SqlB.sqrt(x * x + y * y)
+    theta = _SqlB.atan2(z * g.a, p * g.b)
+    st = _SqlB.sin(theta)
+    ct = _SqlB.cos(theta)
+    phi = _SqlB.atan2(
+        z + g.ep2b * st * st * st, p - g.e2a * ct * ct * ct
+    )
+    return _SqlB.degrees(_SqlB.atan2(y, x)), _SqlB.degrees(phi)
+
+
+# The registered transform functions, one per stage: name, input
+# fields, per-CRS constants (the arguments after the input), formula,
+# output fields. Each takes its input point as one struct and returns
+# a struct, so a chain of stages passes each result on whole and binds
+# it once; passing its fields as separate arguments would copy the
+# producing stage into each of them.
+_LONLAT = ("x", "y")
+_XI_ETA = ("xi", "eta")
+_XYZ = ("x", "y", "z")
+_TRANSFORM_STAGES = (
+    ("tm_forward_conformal", _LONLAT, ("lon0", "c1"), _tm_conformal,
+     ("t", "lam")),
+    ("tm_forward_xieta", ("t", "lam"), (), _tm_xi_eta, _XI_ETA),
+    ("tm_forward_series", _XI_ETA,
+     ("a1", "a2", "a3", "e0", "ka", "n0", "k0", "big_a", "m0"), _tm_series,
+     _LONLAT),
+    ("tm_inverse_xieta", _LONLAT,
+     ("e0", "n0", "km0", "ka", "b1", "b2", "b3"), _tm_inverse_xi_eta,
+     _XI_ETA),
+    ("tm_inverse_lonlat", _XI_ETA, ("d1", "d2", "d3", "lon0"),
+     _tm_inverse_lonlat, _LONLAT),
+    ("datum_to_xyz", _LONLAT, ("a", "e2", "e2c"), _geodetic_to_xyz, _XYZ),
+    ("datum_helmert", _XYZ, ("tx", "ty", "tz", "m", "rx", "ry", "rz"),
+     _helmert, _XYZ),
+    ("datum_to_lonlat", _XYZ, ("a", "b", "ep2b", "e2a"), _xyz_to_geodetic,
+     _LONLAT),
+)
+# The TM series of each direction, as the stages it runs in order.
+_TM_CHAINS = {
+    "tm_forward": ("tm_forward_conformal", "tm_forward_xieta",
+                   "tm_forward_series"),
+    "tm_inverse": ("tm_inverse_xieta", "tm_inverse_lonlat"),
+}
+_CONSTS = {name: consts for name, _, consts, *_ in _TRANSFORM_STAGES}
+_FORMULAS = {name: formula for name, _, _, formula, _ in _TRANSFORM_STAGES}
+
+
+def _struct_type(fields) -> str:
+    return "STRUCT<" + ", ".join(f"{f}: DOUBLE" for f in fields) + ">"
+
+
+def _transform_sql_funcs() -> dict[str, str]:
+    out = {}
+    for name, fields, consts, formula, returns in _TRANSFORM_STAGES:
+        k = SimpleNamespace(**{c: _E(c) for c in consts})
+        vals = formula(*(_E(f"q.{f}") for f in fields), k)
+        params = ", ".join([f"q {_struct_type(fields)}"]
+                           + [f"{c} DOUBLE" for c in consts])
+        body = ", ".join(f"'{f}', {v.s}" for f, v in zip(returns, vals))
+        out[name] = (
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) "
+            f"RETURNS {_struct_type(returns)} RETURN named_struct({body})")
+    return out
+
+
+def _chain_sql(name: str, k: SimpleNamespace, *inputs: str) -> tuple:
+    """The text of chain `name` with the constants of `k` inlined as
+    literals and the input expressions re-inlined at every use."""
+    vals = [_E(i) for i in inputs]
+    for stage in _TM_CHAINS[name]:
+        vals = _FORMULAS[stage](*vals, k)
+    return tuple(v.s for v in vals)
+
+
+def _transform(name: str, k: SimpleNamespace, q: Column) -> Column:
+    """Call registered transform stage `name` on point struct `q` with
+    the constants of `k`."""
+    return _functions._call(name, q, *(
+        F.lit(float(getattr(k, c))) for c in _CONSTS[name]))
+
+
+def _chain(name: str, k: SimpleNamespace, q: Column) -> Column:
+    for stage in _TM_CHAINS[name]:
+        q = _transform(stage, k, q)
+    return q
+
+
+def _point(x: Column, y: Column) -> Column:
+    return F.struct(x.alias("x"), y.alias("y"))
+
+
+def _datum_constants(d: _Datum, to_local: bool):
+    """(source ellipsoid, Helmert constants, target ellipsoid) of the
+    shift WGS-84 -> datum `d` (to_local) or back."""
+    wgs84, local = _ellipsoid(_WGS84_A, _WGS84_F), _ellipsoid(d.a, d.f)
+    if to_local:
+        return wgs84, _helmert_constants(d, inverse=True), local
+    return local, _helmert_constants(d, inverse=False), wgs84
+
+
+def _datum_shift(ll: Column, d: _Datum, to_local: bool) -> Column:
+    src, h, dst = _datum_constants(d, to_local)
+    xyz = _transform("datum_to_xyz", src, ll)
+    return _transform("datum_to_lonlat", dst,
+                      _transform("datum_helmert", h, xyz))
+
+
+def _to_projected(ll: Column, srid: int) -> Column:
+    """WGS-84 lon/lat struct -> `srid` easting/northing struct: the
+    datum shift when the CRS declares one, then the TM projection."""
+    d = _EPSG_TM[srid].datum
+    if d is not None:
+        ll = _datum_shift(ll, d, to_local=True)
+    return _chain("tm_forward", _tm_constants(srid), ll)
+
+
+def _from_projected(en: Column, srid: int) -> Column:
+    """Inverse of _to_projected."""
+    ll = _chain("tm_inverse", _tm_constants(srid), en)
+    d = _EPSG_TM[srid].datum
+    return ll if d is None else _datum_shift(ll, d, to_local=False)
+
+
+# ------------------------------------------------------- public surface
 
 
 def tm_from_wgs84(lon: Column, lat: Column, srid: int) -> Column:
     """ST_Transform(point, any EPSG TM code in _EPSG_TM): WGS-84
     lon/lat -> projected easting/northing struct<x,y>."""
-    e, nn = _tm_formula(
-        _ColOps(), lon.cast("double"), lat.cast("double"), _EPSG_TM[srid]
-    )
-    return F.struct(e.alias("x"), nn.alias("y"))
+    return _chain("tm_forward", _tm_constants(srid), _point(lon, lat))
 
 
 def tm_from_wgs84_sql(lon_expr: str, lat_expr: str, srid: int) -> tuple[str, str]:
     """ANSI-SQL text of `tm_from_wgs84` (for DuckDB oracles)."""
-    e, nn = _tm_formula(
-        _SqlOps(), _SqlExpr(lon_expr), _SqlExpr(lat_expr), _EPSG_TM[srid]
-    )
-    return e.s, nn.s
+    return _chain_sql("tm_forward", _tm_constants(srid), lon_expr, lat_expr)
 
 
 def tm_to_wgs84(easting: Column, northing: Column, srid: int) -> Column:
-    """Inverse of tm_from_wgs84 for any EPSG TM code in _EPSG_TM."""
-    lon, lat = _tm_inverse_formula(
-        _ColOps(), easting.cast("double"), northing.cast("double"),
-        _EPSG_TM[srid],
-    )
-    return F.struct(lon.alias("x"), lat.alias("y"))
+    """Inverse of tm_from_wgs84 for any EPSG TM code in _EPSG_TM — the
+    other direction of ExtensionFunctionsGeo.hpp's ST_Transform
+    overloads."""
+    return _chain("tm_inverse", _tm_constants(srid), _point(easting, northing))
+
+
+def tm_to_wgs84_sql(e_expr: str, n_expr: str, srid: int) -> tuple[str, str]:
+    """ANSI-SQL text of `tm_to_wgs84` (for DuckDB oracles)."""
+    return _chain_sql("tm_inverse", _tm_constants(srid), e_expr, n_expr)
+
+
+def utm_from_wgs84(lon: Column, lat: Column, zone: int) -> Column:
+    """ST_Transform(point, EPSG 326xx): WGS-84 lon/lat -> UTM easting/
+    northing (northern-hemisphere false northing 0) as struct<x,y>."""
+    return tm_from_wgs84(lon, lat, 32600 + zone)
+
+
+def utm_from_wgs84_sql(lon_expr: str, lat_expr: str, zone: int) -> tuple[str, str]:
+    """The ANSI-SQL text of `utm_from_wgs84` (for DuckDB oracles)."""
+    return tm_from_wgs84_sql(lon_expr, lat_expr, 32600 + zone)
 
 
 def utm_to_wgs84(easting: Column, northing: Column, zone: int) -> Column:
@@ -1028,154 +1112,20 @@ def utm_to_wgs84(easting: Column, northing: Column, zone: int) -> Column:
 
 def utm_to_wgs84_sql(e_expr: str, n_expr: str, zone: int) -> tuple[str, str]:
     """ANSI-SQL text of `utm_to_wgs84` (for DuckDB oracles)."""
-    lon, lat = _utm_inverse_formula(
-        _SqlOps(), _SqlExpr(e_expr), _SqlExpr(n_expr), zone
-    )
-    return lon.s, lat.s
-
-
-# --------------------------------------------------------- datum shifts
-#
-# Helmert 7-parameter datum transformation for CRSs whose datum is not
-# WGS-84-coincident (27700/OSGB36, 230xx/ED50): geodetic (h=0) ->
-# geocentric XYZ -> position-vector Helmert -> geodetic on the other
-# ellipsoid (Bowring's closed single-step inverse, sub-mm at h=0).
-# The reference applies exactly this via proj's +towgs84 parameters;
-# here each step is written once over the two expression backends so
-# the oracle replays the identical floating-point structure. Each
-# stage must be leaf-bound (_bind_once / a SQL subquery column) before
-# feeding the next — the TM series references its inputs many times
-# and inlining a datum-shift expression there blows the tree up
-# multiplicatively.
-
-
-def _geodetic_to_xyz_formula(ops, lon, lat, a: float, f: float):
-    e2 = f * (2.0 - f)
-    phi = ops.radians(lat)
-    lam = ops.radians(lon)
-    s = ops.sin(phi)
-    big_n = a / ops.sqrt(1.0 - e2 * s * s)
-    return (
-        big_n * ops.cos(phi) * ops.cos(lam),
-        big_n * ops.cos(phi) * ops.sin(lam),
-        big_n * (1.0 - e2) * s,
-    )
-
-
-def _helmert_formula(x, y, z, d: _Datum, inverse: bool):
-    """Position-vector Helmert LOCAL->WGS84; inverse=True applies the
-    standard negated-parameter reverse (error << 1 mm at these
-    magnitudes). Pure arithmetic — backend-agnostic."""
-    sgn = -1.0 if inverse else 1.0
-    m = 1.0 + sgn * d.s
-    rx, ry, rz = sgn * d.rx, sgn * d.ry, sgn * d.rz
-    return (
-        sgn * d.tx + m * (x - rz * y + ry * z),
-        sgn * d.ty + m * (rz * x + y - rx * z),
-        sgn * d.tz + m * (-(ry * x) + rx * y + z),
-    )
-
-
-def _xyz_to_geodetic_formula(ops, x, y, z, a: float, f: float):
-    """Bowring's closed-form geocentric -> geodetic (lat, lon only —
-    height is discarded; input points are surface coordinates)."""
-    b = a * (1.0 - f)
-    e2 = f * (2.0 - f)
-    ep2 = e2 / (1.0 - e2)
-    p = ops.sqrt(x * x + y * y)
-    theta = ops.atan2(z * a, p * b)
-    st = ops.sin(theta)
-    ct = ops.cos(theta)
-    phi = ops.atan2(
-        z + ep2 * b * st * st * st, p - e2 * a * ct * ct * ct
-    )
-    return ops.degrees(ops.atan2(y, x)), ops.degrees(phi)
-
-
-def _wgs84_to_datum(ll: Column, d: _Datum) -> Column:
-    """WGS-84 lon/lat struct -> lon/lat struct on datum `d`, each stage
-    lambda-bound so no series ever inlines another."""
-    ops = _ColOps()
-
-    def to_xyz(q):
-        x, y, z = _geodetic_to_xyz_formula(
-            ops, q["x"], q["y"], _WGS84_A, _WGS84_F
-        )
-        return F.struct(x.alias("x"), y.alias("y"), z.alias("z"))
-
-    def shift(q):
-        x, y, z = _helmert_formula(q["x"], q["y"], q["z"], d, inverse=True)
-        return F.struct(x.alias("x"), y.alias("y"), z.alias("z"))
-
-    def to_geo(q):
-        lon, lat = _xyz_to_geodetic_formula(
-            ops, q["x"], q["y"], q["z"], d.a, d.f
-        )
-        return F.struct(lon.alias("x"), lat.alias("y"))
-
-    return _bind_once(_bind_once(_bind_once(ll, to_xyz), shift), to_geo)
-
-
-def _datum_to_wgs84(ll: Column, d: _Datum) -> Column:
-    """Inverse of _wgs84_to_datum: local-datum lon/lat -> WGS-84."""
-    ops = _ColOps()
-
-    def to_xyz(q):
-        x, y, z = _geodetic_to_xyz_formula(ops, q["x"], q["y"], d.a, d.f)
-        return F.struct(x.alias("x"), y.alias("y"), z.alias("z"))
-
-    def shift(q):
-        x, y, z = _helmert_formula(
-            q["x"], q["y"], q["z"], d, inverse=False
-        )
-        return F.struct(x.alias("x"), y.alias("y"), z.alias("z"))
-
-    def to_geo(q):
-        lon, lat = _xyz_to_geodetic_formula(
-            ops, q["x"], q["y"], q["z"], _WGS84_A, _WGS84_F
-        )
-        return F.struct(lon.alias("x"), lat.alias("y"))
-
-    return _bind_once(_bind_once(_bind_once(ll, to_xyz), shift), to_geo)
+    return tm_to_wgs84_sql(e_expr, n_expr, 32600 + zone)
 
 
 def tm_from_wgs84_full(lon: Column, lat: Column, srid: int) -> Column:
     """Reference-semantics ST_Transform(4326 -> srid): datum shift
     (when the CRS declares one) THEN the TM projection — what proj
     does for 27700/230xx. The raw tm_from_wgs84 stays projection-only."""
-    prm = _EPSG_TM[srid]
-    if prm.datum is None:
-        return tm_from_wgs84(lon, lat, srid)
-    ll = F.struct(
-        lon.cast("double").alias("x"), lat.cast("double").alias("y")
-    )
-    shifted = _wgs84_to_datum(ll, prm.datum)
-    return _bind_once(
-        shifted,
-        lambda q: F.struct(
-            *(
-                c.alias(n)
-                for c, n in zip(
-                    _tm_formula(_ColOps(), q["x"], q["y"], prm), ("x", "y")
-                )
-            )
-        ),
-    )
+    return _to_projected(_point(lon, lat), srid)
 
 
 def tm_to_wgs84_full(easting: Column, northing: Column, srid: int) -> Column:
     """Reference-semantics ST_Transform(srid -> 4326): inverse TM THEN
     the datum shift back to WGS-84."""
-    prm = _EPSG_TM[srid]
-    if prm.datum is None:
-        return tm_to_wgs84(easting, northing, srid)
-    # the inverse series references easting/northing dozens of times:
-    # bind them once, or a computed input is inlined at each reference
-    en = F.struct(
-        easting.cast("double").alias("x"), northing.cast("double").alias("y")
-    )
-    local = _bind_once(en, lambda q: tm_to_wgs84(q["x"], q["y"], srid))
-    return _datum_to_wgs84(local, prm.datum)
+    return _from_projected(_point(easting, northing), srid)
 
 
 def datum_sql_stages(
@@ -1184,32 +1134,20 @@ def datum_sql_stages(
 ) -> list[list[tuple[str, str]]]:
     """The ANSI-SQL text of the three datum-shift stages (for DuckDB
     oracles), as [(alias, expr), ...] lists per stage; the caller lays
-    each stage in its own subquery/CTE so expressions stay leaf-fed,
-    mirroring the _bind_once chain. inverse=False: WGS84 -> local
-    datum (the forward-projection direction). `prefix` namespaces the
-    intermediate column aliases so several pipelines can share one
-    CTE chain."""
-    d = _EPSG_TM[srid].datum
-    ops = _SqlOps()
-    src = (_WGS84_A, _WGS84_F) if not inverse else (d.a, d.f)
-    dst = (d.a, d.f) if not inverse else (_WGS84_A, _WGS84_F)
+    each stage in its own subquery/CTE so each stage reads its inputs
+    as columns, as the registered stages do. inverse=False: WGS84 ->
+    local datum (the forward-projection direction). `prefix`
+    namespaces the intermediate column aliases so several pipelines
+    can share one CTE chain."""
+    src, h, dst = _datum_constants(_EPSG_TM[srid].datum, not inverse)
     g = [prefix + n for n in ("gx", "gy", "gz")]
-    h = [prefix + n for n in ("hx", "hy", "hz")]
+    m = [prefix + n for n in ("hx", "hy", "hz")]
     o = [prefix + n for n in ("lon2", "lat2")]
-    x, y, z = _geodetic_to_xyz_formula(
-        ops, _SqlExpr(lon_expr), _SqlExpr(lat_expr), *src
-    )
-    stage1 = list(zip(g, (x.s, y.s, z.s)))
-    hx, hy, hz = _helmert_formula(
-        _SqlExpr(g[0]), _SqlExpr(g[1]), _SqlExpr(g[2]), d,
-        inverse=not inverse,
-    )
-    stage2 = list(zip(h, (hx.s, hy.s, hz.s)))
-    lon2, lat2 = _xyz_to_geodetic_formula(
-        ops, _SqlExpr(h[0]), _SqlExpr(h[1]), _SqlExpr(h[2]), *dst
-    )
-    stage3 = list(zip(o, (lon2.s, lat2.s)))
-    return [stage1, stage2, stage3]
+    xyz = _geodetic_to_xyz(_E(lon_expr), _E(lat_expr), src)
+    moved = _helmert(*map(_E, g), h)
+    ll = _xyz_to_geodetic(*map(_E, m), dst)
+    return [[(a, v.s) for a, v in zip(names, vals)]
+            for names, vals in ((g, xyz), (m, moved), (o, ll))]
 
 
 def st_transform_900913_4326(p: Column) -> Column:
@@ -1225,17 +1163,6 @@ def st_transform_900913_4326(p: Column) -> Column:
     )
 
 
-def _bind_once(struct_col: Column, fn) -> Column:
-    """Evaluate `struct_col` once by binding it to a higher-order-
-    function lambda variable. The transform series reference their
-    input point dozens of times; naive Column composition would inline
-    the full input expression at every reference — a multiplicative
-    expression-tree blow-up that OOMs the driver at plan build when
-    transforms chain. The lambda variable is a leaf, so each series
-    stays O(its own size)."""
-    return F.element_at(F.transform(F.array(struct_col), fn), 1)
-
-
 def st_transform(p: Column, from_srid: int, to_srid: int) -> Column:
     """SRID-dispatching ST_Transform (the reference's overload surface,
     QueryEngine/ExtensionFunctionsGeo.hpp): closed-form SRIDs are 4326,
@@ -1248,34 +1175,20 @@ def st_transform(p: Column, from_srid: int, to_srid: int) -> Column:
     like proj's +towgs84 path in the reference; grid-based datums
     (NAD27/NADCON, OSTN) remain out of scope. Other projections raise
     (the reference delegates them to proj, an out-of-container
-    dependency). The input point is lambda-bound once so chained
-    transforms can't blow up the expression tree."""
+    dependency)."""
     if from_srid == to_srid:
         return p
-    return _bind_once(p, lambda q: _st_transform_leaf(q, from_srid, to_srid))
-
-
-def _st_transform_leaf(p: Column, from_srid: int, to_srid: int) -> Column:
-    """Dispatch on a leaf-like point (lambda variable or plain column
-    struct) — every branch may reference p.x/p.y freely."""
     if (from_srid, to_srid) == (4326, 900913):
         return st_transform_4326_900913(p)
     if (from_srid, to_srid) == (900913, 4326):
         return st_transform_900913_4326(p)
     if from_srid == 4326 and to_srid in _EPSG_TM:
-        return tm_from_wgs84_full(p["x"], p["y"], to_srid)
-    if to_srid == 4326 and from_srid in _EPSG_TM:
-        return tm_to_wgs84_full(p["x"], p["y"], from_srid)
-    if from_srid in _EPSG_TM and (
-        to_srid in _EPSG_TM or to_srid == 900913
-    ):
-        ll = tm_to_wgs84_full(p["x"], p["y"], from_srid)
-        return _bind_once(ll, lambda q: _st_transform_leaf(q, 4326, to_srid))
+        return _to_projected(p, to_srid)
+    if from_srid in _EPSG_TM and (to_srid in (4326, 900913)
+                                  or to_srid in _EPSG_TM):
+        return st_transform(_from_projected(p, from_srid), 4326, to_srid)
     if from_srid == 900913 and to_srid in _EPSG_TM:
-        ll = st_transform_900913_4326(p)
-        return _bind_once(
-            ll, lambda q: tm_from_wgs84_full(q["x"], q["y"], to_srid)
-        )
+        return st_transform(st_transform_900913_4326(p), 4326, to_srid)
     raise ValueError(
         f"ST_Transform {from_srid}->{to_srid} unsupported; closed-form "
         "SRIDs are 4326, 900913, and the EPSG transverse-Mercator table "
@@ -1880,6 +1793,9 @@ def _equals_any_sql():
 
 
 _GEO_SQL_FUNCS["st_equals_any"] = _equals_any_sql()
+
+# the transform stages the Column builders call
+_GEO_SQL_FUNCS.update(_transform_sql_funcs())
 
 # vertex-wise ring-set transform to web mercator (the SQL form's one
 # supported target; the DataFrame API carries the EPSG table)

@@ -7,22 +7,20 @@ sizing. In the reference these power the backend renderer's binned
 scatter / hex layers; a render query projects the bin center per row
 and group-bys on it. Here each function is ONE codegen'd expression
 built from a shared formula over two backends — Spark Columns and
-ANSI-SQL text (for DuckDB oracles) — exactly the geo.py Krueger-series
-pattern. Computed in float64 throughout (the reference uses float32
-intermediates; double is a strict precision upgrade, and oracle parity
-is unaffected because both engines run the identical double formula).
+ANSI-SQL text (for DuckDB oracles; the H3 and transform formulas of
+h3.py and geo.py are written over this text backend alone). Computed
+in float64 throughout (the reference uses float32 intermediates;
+double is a strict precision upgrade, and oracle parity is unaffected
+because both engines run the identical double formula).
 
 Scale shape: pure scalar projections (no shuffle); a render aggregation
 is then an ordinary hash group-by on the bin value.
 
-Deliberate inline expansion: the hex formulas repeat their
-intermediates (pix/cube/rounded) many times in the generated tree.
-Binding them through higher-order-function lambdas (geo.py _bind_once)
-was measured SLOWER at runtime — Spark does not codegen higher-order
-functions, so the bind trades a one-time compile cost for interpreted
-per-row evaluation (0.87s -> 1.14s on the bench head). The inline
-blow-up is bounded (~10x a small formula) and compiles once per stage;
-keep it inline.
+The hex Column builders inline their intermediates (pix/cube/rounded)
+at every use: the blow-up is bounded (~10x a small formula, about 24 KB
+of text per axis) and compiles once per stage. The H3 and transform
+builders instead call registered SQL functions, which bind each input
+once.
 """
 
 from __future__ import annotations
@@ -83,6 +81,10 @@ class _E:
         return _E(f"- {self.s}")
 
 
+def _fn(name):
+    return staticmethod(lambda x: _E(f"{name}({x.s})"))
+
+
 class _SqlB:
     """SQL-text backend."""
 
@@ -141,29 +143,13 @@ class _SqlB:
     def band(x, mask: int):
         return _E(f"CAST({x.s} AS BIGINT) & {int(mask)}")
 
-    @staticmethod
-    def sin(x):
-        return _E(f"sin({x.s})")
+    sin, cos, tan, asin, atan, exp, ln, sqrt, radians, degrees = (
+        _fn(name) for name in ("sin", "cos", "tan", "asin", "atan", "exp",
+                               "ln", "sqrt", "radians", "degrees"))
 
     @staticmethod
-    def cos(x):
-        return _E(f"cos({x.s})")
-
-    @staticmethod
-    def asin(x):
-        return _E(f"asin({x.s})")
-
-    @staticmethod
-    def sqrt(x):
-        return _E(f"sqrt({x.s})")
-
-    @staticmethod
-    def ln(x):
-        return _E(f"ln({x.s})")
-
-    @staticmethod
-    def tan(x):
-        return _E(f"tan({x.s})")
+    def atan2(y, x):
+        return _E(f"atan2({y.s}, {x.s})")
 
 
 class _ColB:

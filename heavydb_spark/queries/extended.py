@@ -2248,10 +2248,10 @@ def geo_transform_datum(spark, sf_dir):
     -> EPSG 23031 (ED50/UTM 31N) the 3-parameter European-mean shift
     on Hayford. The oracle replays each pipeline stage (geodetic ->
     geocentric XYZ -> Helmert -> Bowring inverse -> TM) as a chained
-    CTE with leaf-bound columns — the same staging the Column side
-    does with lambda binding, so both engines execute the identical
-    floating-point structure. Grid datums (NAD27, OSTN15) stay
-    documented out of scope."""
+    CTE that reads each stage's inputs as columns — the same staging
+    as the registered datum functions the Column side calls, so both
+    engines execute the identical floating-point structure. Grid
+    datums (NAD27, OSTN15) stay documented out of scope."""
     c = T(spark, sf_dir, "customer").filter(F.col("c_custkey") < 300)
     lon = F.lit(-6.0) + (F.col("c_custkey") % 700).cast("double") / 100
     lat = F.lit(50.0) + ((F.col("c_custkey") * 3) % 900).cast("double") / 100

@@ -1986,17 +1986,142 @@ def test_h3_randomized_cross_engine(spark, seed):
         ).first()
         lon_s = f"CAST({lon!r} AS DOUBLE)"
         lat_s = f"CAST({lat!r} AS DOUBLE)"
+        # the cell is a subquery column, so the decode and parent
+        # formulas read it once instead of re-inlining its text
         cell_sql = H.h3_lonlat_to_cell_sql(lon_s, lat_s, res)
         dd = con.execute(
-            f"SELECT {cell_sql} AS c, "
-            f"{H.h3_cell_to_lon_sql(cell_sql)} AS lo, "
-            f"{H.h3_cell_to_parent_sql(cell_sql, pres)} AS p, "
-            f"{render.rect_pixel_bin_x_sql(lon_s, -180.0, 180.0, 7.0, float(seed), 720)} AS rb"
+            f"SELECT c, {H.h3_cell_to_lon_sql('c')} AS lo, "
+            f"{H.h3_cell_to_parent_sql('c', pres)} AS p, "
+            f"{render.rect_pixel_bin_x_sql(lon_s, -180.0, 180.0, 7.0, float(seed), 720)} AS rb "
+            f"FROM (SELECT {cell_sql} AS c)"
         ).fetchone()
         assert dd[0] == sp["c"], (lon, lat, res)
         assert abs(dd[1] - sp["lo"]) < 1e-12
         assert dd[2] == sp["p"]
         assert abs(dd[3] - sp["rb"]) < 1e-9
+
+
+@pytest.mark.parametrize("res", (-1, 16))
+def test_h3_resolution_checked_when_built(spark, res):
+    """A Python-int resolution outside 0-15 raises ValueError while the
+    Column is built, before any plan exists."""
+    from heavydb_spark.functions import h3 as H
+
+    with pytest.raises(ValueError, match="invalid resolution"):
+        H.h3_lonlat_to_cell(F.col("lon"), F.col("lat"), res)
+    with pytest.raises(ValueError, match="invalid resolution"):
+        H.h3_cell_to_parent(F.col("cell"), res)
+
+
+def test_column_builders_register_lazily(spark):
+    """The H3 and transform Column builders register the SQL functions
+    they call on the active session when it has none: with the session
+    forgotten by the registry and one function of each family dropped,
+    building and collecting re-registers them and returns the same
+    values."""
+    from pyspark.sql import SparkSession
+
+    from heavydb_spark import functions
+    from heavydb_spark.functions import geo
+    from heavydb_spark.functions import h3 as H
+
+    assert SparkSession.active() is spark
+    functions.register_all(spark)
+    df = spark.createDataFrame([(-0.1281, 51.508)], "lon double, lat double")
+
+    def run():
+        cell = H.h3_lonlat_to_cell(F.col("lon"), F.col("lat"), 9)
+        return df.select(
+            H.h3_cell_to_parent(cell, 4).alias("p"),
+            geo.tm_from_wgs84_full(F.col("lon"), F.col("lat"), 27700).alias("t"),
+        ).first()
+
+    want = run()
+    functions._REGISTERED.discard(spark)
+    spark.sql("DROP TEMPORARY FUNCTION h3_celltoparent")
+    spark.sql("DROP TEMPORARY FUNCTION datum_helmert")
+    try:
+        assert run() == want
+        assert spark in functions._REGISTERED
+    finally:
+        functions.register_all(spark)
+
+
+def test_transform_registered_sql_matches_text_builders(spark):
+    """The registered transform functions the Column builders call
+    agree with the `*_sql` text builders run in DuckDB: the forward and
+    inverse series and the datum stages, for one SRID of each _EPSG_TM
+    family, within the existing transform tolerances (1e-6 m, 1e-9
+    degrees)."""
+    import duckdb
+
+    from heavydb_spark.functions import geo
+
+    lats = {32633: (1.0, 45.0, 70.0), 32756: (-5.0, -33.9, -60.0),
+            25832: (40.0, 52.0, 60.0), 23031: (38.0, 48.9, 55.0),
+            27700: (50.1, 51.5, 57.0), 2157: (51.7, 53.3, 55.2),
+            2193: (-36.8, -41.3, -45.9)}
+    con = duckdb.connect()
+
+    def duck(select, rows, cols):
+        """Run `select` in DuckDB over `rows` as (id, *cols) DOUBLEs."""
+        values = ", ".join(
+            "(" + ", ".join([str(r[0])] + [f"CAST({v!r} AS DOUBLE)"
+                                           for v in r[1:]]) + ")"
+            for r in rows)
+        src = f"(VALUES {values}) t(id, {', '.join(cols)})"
+        return {r[0]: r[1:] for r in con.execute(
+            select.format(src=src)).fetchall()}
+
+    def staged(stage_list, inner):
+        sel = ", ".join(f"{sql} AS {name}" for name, sql in stage_list)
+        return f"(SELECT id, {sel} FROM {inner})"
+
+    for srid, lat_list in lats.items():
+        lon0 = geo._EPSG_TM[srid].lon0
+        pts = [(i, lon0 + dl, lat) for i, (dl, lat) in enumerate(
+            (dl, lat) for dl in (-2.0, 0.3, 2.5) for lat in lat_list)]
+        e, n = geo.tm_from_wgs84_sql("lon0", "lat0", srid)
+        fwd = duck(f"SELECT id, {e}, {n} FROM {{src}}", pts, ("lon0", "lat0"))
+        lon, lat = geo.tm_to_wgs84_sql("e", "n", srid)
+        inv = duck(f"SELECT id, {lon}, {lat} FROM {{src}}",
+                   [(i, *fwd[i]) for i, _, _ in pts], ("e", "n"))
+        full = back = None
+        if geo._EPSG_TM[srid].datum is not None:
+            fe, fn = geo.tm_from_wgs84_sql("lon2", "lat2", srid)
+            inner = "{src}"
+            for stage in geo.datum_sql_stages("lon0", "lat0", srid):
+                inner = staged(stage, inner)
+            full = duck(f"SELECT id, {fe}, {fn} FROM {inner}", pts,
+                        ("lon0", "lat0"))
+            # inverse TM, then the datum shift back to WGS-84
+            inner = f"(SELECT id, {lon} AS ilon, {lat} AS ilat FROM {{src}})"
+            for stage in geo.datum_sql_stages("ilon", "ilat", srid,
+                                              inverse=True):
+                inner = staged(stage, inner)
+            back = duck(f"SELECT id, lon2, lat2 FROM {inner}",
+                        [(i, *full[i]) for i, _, _ in pts], ("e", "n"))
+
+        df = spark.createDataFrame(
+            [(i, x, y, *fwd[i], *(full[i] if full else fwd[i]))
+             for i, x, y in pts],
+            "id int, lon double, lat double, e double, n double, "
+            "fe double, fn double")
+        got = df.select(
+            "id",
+            geo.tm_from_wgs84(F.col("lon"), F.col("lat"), srid).alias("f"),
+            geo.tm_to_wgs84(F.col("e"), F.col("n"), srid).alias("b"),
+            geo.tm_from_wgs84_full(F.col("lon"), F.col("lat"), srid).alias("ff"),
+            geo.tm_to_wgs84_full(F.col("fe"), F.col("fn"), srid).alias("bf"),
+        ).collect()
+        for r in got:
+            i = r["id"]
+            checks = [(r["f"], fwd[i], 1e-6), (r["b"], inv[i], 1e-9)]
+            if full is not None:
+                checks += [(r["ff"], full[i], 1e-6), (r["bf"], back[i], 1e-9)]
+            for p, want, tol in checks:
+                assert abs(p["x"] - want[0]) < tol, (srid, i, p, want)
+                assert abs(p["y"] - want[1]) < tol, (srid, i, p, want)
 
 
 def test_datum_shift_helmert(spark):
@@ -2043,19 +2168,6 @@ def test_datum_shift_helmert(spark):
     p = geo.st_point(F.col("lon"), F.col("lat"))
     via = df.select(geo.st_transform(p, 4326, 27700).alias("v")).first().v
     assert abs(via.x - r.f.x) < 1e-6 and abs(via.y - r.f.y) < 1e-6
-
-
-def test_datum_shift_round_trip_expression_stays_small(spark):
-    """tm_to_wgs84_full binds its easting/northing inputs once. Fed
-    the 27700 forward transform, the round-trip expression stays under
-    500,000 characters; inlining the inputs at every reference of the
-    inverse series built about 5.2 million, which took over a minute
-    to plan for one row."""
-    from heavydb_spark.functions import geo
-
-    full = geo.tm_from_wgs84_full(F.col("lon"), F.col("lat"), 27700)
-    back = geo.tm_to_wgs84_full(full["x"], full["y"], 27700)
-    assert len(back._jc.toString()) < 500_000
 
 
 def test_shared_run_pairs_containment_and_longest_run(spark):

@@ -1,10 +1,12 @@
 """Repository hygiene: no unreachable definitions, no stale doc paths,
-no bloated SQL function bodies.
+no bloated SQL function bodies, no Column builder whose plan multiplies
+when composed.
 
 The first two checks read source text only (stdlib `ast` + `tokenize`).
 The body-size check records the text `register_all` would send to Spark;
 it takes the `spark` fixture only because pandas-UDF return types parse
-against an active session.
+against an active session. The plan-size check measures the optimized
+plan Spark builds for each composed builder.
 """
 
 from __future__ import annotations
@@ -15,6 +17,8 @@ import os
 import re
 import tokenize
 from types import SimpleNamespace
+
+import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Where a reference to a heavydb_spark definition may live.
@@ -28,6 +32,16 @@ _WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 # seconds of set-up per function.
 MAX_FUNCTION_TEXT = 8_000
 _FUNCTION_NAME = re.compile(r"FUNCTION\s+(\w+)")
+# Longest optimized-plan text an H3 or transform Column builder may
+# produce when composed with itself once. A builder that calls a
+# registered SQL function binds its input once (under 12,000
+# characters each); one that re-inlines its input at every use
+# multiplies the plan (from about 18,500 characters for the longitude
+# of an H3 cell to 7.9 million for a UTM round trip).
+MAX_PLAN_TEXT = 15_000
+_COMPOSED = ("h3_cell_to_parent", "h3_cell_to_lon", "utm_to_wgs84",
+             "tm_to_wgs84_full-27700", "tm_to_wgs84_full-23031",
+             "st_transform")
 
 
 def _py_files(rel: str) -> list[str]:
@@ -136,3 +150,38 @@ def test_registered_function_bodies_stay_small(spark):
         for t in texts if len(t) > MAX_FUNCTION_TEXT
     ]
     assert texts and not big, "function bodies too long:\n" + "\n".join(big)
+
+
+def _composed(name: str):
+    """Builder `name` applied to its own output, over columns lon, lat."""
+    from pyspark.sql import functions as F
+
+    from heavydb_spark.functions import geo, h3
+
+    lon, lat = F.col("lon"), F.col("lat")
+    if name.startswith("h3_"):
+        cell = h3.h3_lonlat_to_cell(lon, lat, 9)
+        if name == "h3_cell_to_parent":
+            return h3.h3_cell_to_parent(cell, 4)
+        return h3.h3_cell_to_lon(cell)
+    if name == "st_transform":
+        p = geo.st_transform(F.struct(lon.alias("x"), lat.alias("y")),
+                             4326, 32633)
+        return geo.st_transform(p, 32633, 32634)
+    if name == "utm_to_wgs84":
+        p = geo.utm_from_wgs84(lon, lat, 33)
+        return geo.utm_to_wgs84(p["x"], p["y"], 33)
+    srid = int(name.rsplit("-", 1)[1])
+    p = geo.tm_from_wgs84_full(lon, lat, srid)
+    return geo.tm_to_wgs84_full(p["x"], p["y"], srid)
+
+
+@pytest.mark.parametrize("name", _COMPOSED)
+def test_composed_builder_plans_stay_small(spark, name):
+    """The 27700 input is the datum round trip: inlining its inputs at
+    every reference of the inverse series once built about 5.2 million
+    characters, which took over a minute to plan for one row."""
+    df = spark.createDataFrame([(9.5, 47.0)], "lon double, lat double")
+    plan = df.select(_composed(name))._jdf.queryExecution().optimizedPlan()
+    size = len(plan.toString())
+    assert size <= MAX_PLAN_TEXT, f"{name}: {size} characters"
