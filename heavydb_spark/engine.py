@@ -1411,14 +1411,7 @@ class Engine:
         # checkpoint: count + append run off ONE execution of the load
         loaded = loaded.select(*target.columns).localCheckpoint(eager=True)
         n = loaded.count()
-        if self._is_temp_view(name):
-            target.unionByName(loaded).createOrReplaceTempView(name)
-        else:
-            loaded.write.insertInto(name)
-        # load_table mutates table data exactly like INSERT — cached
-        # results over the table are stale (the reference invalidates
-        # by table epoch on any append)
-        self._invalidate_result_cache()
+        self._append(name, loaded)
         return self.spark.createDataFrame(
             [(name, n)], "table_name STRING, rows_loaded BIGINT"
         )
@@ -1453,7 +1446,15 @@ class Engine:
                     m["table"].strip('`"'))
             except Exception:
                 skip_sync = False
-        out = self._sql_impl(query, kind, m, read_only)
+        try:
+            out = self._sql_impl(query, kind, m, read_only)
+        finally:
+            if not read_only:
+                # after the statement, not before: a read that built
+                # its frame while the statement ran sees the epoch move
+                # and is not cached (result-set recycling invalidates
+                # per table epoch in the reference; wholesale here)
+                self._invalidate_result_cache()
         if not skip_sync:
             self._time_registry_sync(kind, m)
         return out
@@ -1489,12 +1490,6 @@ class Engine:
 
     def _sql_impl(self, query: str, kind: str, m: re.Match | None,
                   read_only: bool) -> DataFrame:
-        if self._result_cache_entries and not read_only:
-            # result-set recycling: any statement that can change data
-            # or catalog state — including WITH-headed DML — drops
-            # every cached result (the reference invalidates per table
-            # epoch; wholesale is the safe single-user equivalent).
-            self._invalidate_result_cache()
         handler = _KINDS[kind][1] if m else None
         if kind in _BEFORE_TABLE_FUNCTIONS:
             return handler(self, m)
@@ -2406,11 +2401,13 @@ class Engine:
         return [tables.apply(i).table() for i in range(tables.size())]
 
     def _is_temp_view(self, name: str) -> bool:
-        short = name.split(".")[-1]
-        return any(
-            t.name == short and t.tableType == "TEMPORARY"
-            for t in self.spark.catalog.listTables()
-        )
+        """Whether Spark resolves `name` to a temp view: the session
+        catalog parses the identifier (backticks, qualifiers) and
+        matches it case-insensitively unless spark.sql.caseSensitive
+        is set, as the statement's own analysis does."""
+        state = self.spark._jsparkSession.sessionState()
+        return state.catalog().isTempView(
+            state.sqlParser().parseMultipartIdentifier(name))
 
     def _table_bucketing(self, name: str) -> tuple[int, list[str]]:
         """(num_buckets, bucket_cols) of a managed table — the physical
@@ -2459,21 +2456,59 @@ class Engine:
         return self.spark.createDataFrame(
             [(name, "created")], "table_name STRING, status STRING")
 
-    def _clear_stale_staging(self, staging: str) -> None:
-        """A run killed between stage and swap leaves the staging
-        table behind — and because the session catalog is in-memory
-        while `spark-warehouse/` persists, usually just its warehouse
-        DIRECTORY, so the next `errorifexists` saveAsTable fails with
-        LOCATION_ALREADY_EXISTS and every future rewrite of the table
-        wedges until someone removes the directory by hand (r12
-        verdict What's-wrong #2, hit live by the judge). Clear both
-        forms before staging: the name is engine-owned (double-
-        underscore suffix) and staging data is always a discardable
-        fresh copy — the parked original (`__dml_old` etc.) is NOT
-        cleared here, since after a mid-swap kill it can be the sole
-        surviving copy of user data."""
+    def _replace(self, table: str, image: DataFrame, stage: str) -> None:
+        """Install `image` as the contents of `table`; every rewrite
+        (UPDATE, DELETE, ALTER's column actions, OPTIMIZE, TRUNCATE of
+        a view) goes through here. A temp view is replaced: the
+        image's plan binds to the view's underlying scan, not to its
+        name, so this is not self-referential. A managed table is
+        written to `{table}__{stage}_staging` with its CLUSTERED BY
+        layout and swapped in by rename, so native INSERTs and
+        DESCRIBEs keep seeing a real table, never a shadowing view."""
         try:
-            self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
+            if self._is_temp_view(table):
+                image.createOrReplaceTempView(table)
+                return
+            n_buckets, bucket_cols = self._table_bucketing(table)
+            bucket_cols = [c for c in bucket_cols if c in image.columns]
+            staging = f"{table}__{stage}_staging"
+            self._clear_leftover(staging)
+            writer = image.write.mode("errorifexists").format("parquet")
+            if n_buckets and bucket_cols:
+                writer = writer.bucketBy(n_buckets, *bucket_cols).sortBy(
+                    *bucket_cols
+                )
+            writer.saveAsTable(staging)
+            self._swap_tables(staging, table, f"{table}__{stage}_old")
+        finally:
+            self._invalidate_result_cache()
+
+    def _append(self, table: str, rows: DataFrame) -> None:
+        """Add `rows` to `table` (INSERT-like: load_table, COPY FROM).
+        A temp view is replaced by its union with them; a managed
+        table appends in place."""
+        try:
+            if self._is_temp_view(table):
+                self.spark.table(table).unionByName(
+                    rows).createOrReplaceTempView(table)
+            else:
+                rows.write.insertInto(table)
+        finally:
+            self._invalidate_result_cache()
+
+    def _clear_leftover(self, name: str) -> None:
+        """Drop an engine-owned staging or park table (double-
+        underscore suffix) that an earlier run left behind. A run
+        killed mid-rewrite usually leaves only the warehouse
+        DIRECTORY, because the session catalog is in-memory while
+        `spark-warehouse/` persists; the next `errorifexists`
+        saveAsTable or rename onto that name then fails with
+        LOCATION_ALREADY_EXISTS and every later rewrite of the table
+        wedges. Both forms are cleared. Callers clear a park only
+        while its table exists: without the table, the park can be
+        the sole surviving copy of user data."""
+        try:
+            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
         except Exception:
             pass
         try:
@@ -2481,7 +2516,7 @@ class Engine:
             import shutil
             from urllib.parse import urlparse
 
-            parts = staging.strip("`\"").lower().split(".")
+            parts = name.strip("`\"").lower().split(".")
             if len(parts) == 1:
                 try:
                     db = self.spark.catalog.currentDatabase().lower()
@@ -2509,6 +2544,10 @@ class Engine:
         User-visible metadata (table comment, heavydb.* TBLPROPERTIES,
         column comments) carries over from the original — a rewrite
         must not silently shed it."""
+        # `target` exists (the caller just read it), so a table or
+        # directory already under `park` is the pre-image of a swap
+        # that completed but whose final DROP failed or was killed
+        self._clear_leftover(park)
         self.spark.sql(f"ALTER TABLE {target} RENAME TO {park}")
         try:
             self.spark.sql(f"ALTER TABLE {staging} RENAME TO {target}")
@@ -2585,16 +2624,7 @@ class Engine:
         df = self.spark.table(name)
         n = df.count()
         parts = max(1, -(-n // target_file_rows))
-        n_buckets, bucket_cols = self._table_bucketing(name)
-        writer = df.repartition(parts).write.mode("overwrite").format("parquet")
-        if n_buckets and bucket_cols:
-            writer = writer.bucketBy(n_buckets, *bucket_cols).sortBy(
-                *bucket_cols
-            )
-        tmp = f"{name}__optimized_tmp"
-        self._clear_stale_staging(tmp)
-        writer.saveAsTable(tmp)
-        self._swap_tables(tmp, name, f"{name}__optimized_old")
+        self._replace(name, df.repartition(parts), "optimized")
         self.spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
         return self.spark.createDataFrame(
             [(name, n, parts)],
@@ -2831,28 +2861,6 @@ class Engine:
             stmt.append(f"AS {ctas_select}")
         return self.spark.sql(" ".join(stmt))
 
-    def _dml_apply(self, table: str, post_image: DataFrame) -> None:
-        """Install a DML post-image: attached views are replaced (the
-        post-image plan binds to the underlying scan, not the view
-        name, so this is not self-referential); managed tables rewrite
-        through the bucketing-preserving stage-and-swap — native
-        INSERTs and DESCRIBEs keep seeing a real table, never a
-        shadowing view."""
-        if self._is_temp_view(table):
-            post_image.createOrReplaceTempView(table)
-            return
-        n_buckets, bucket_cols = self._table_bucketing(table)
-        bucket_cols = [c for c in bucket_cols if c in post_image.columns]
-        staging = f"{table}__dml_staging"
-        self._clear_stale_staging(staging)
-        writer = post_image.write.mode("errorifexists").format("parquet")
-        if n_buckets and bucket_cols:
-            writer = writer.bucketBy(n_buckets, *bucket_cols).sortBy(
-                *bucket_cols
-            )
-        writer.saveAsTable(staging)
-        self._swap_tables(staging, table, f"{table}__dml_old")
-
     def _dml_update(self, table: str, set_clause: str, where: str | None) -> DataFrame:
         from heavydb_spark.operators.mutation import update_projection
 
@@ -2913,9 +2921,10 @@ class Engine:
                     col = F.expr(f"CAST(round({tmp}, 0) AS {tgt})")
             assignments[k] = col
         affected = df.filter(cond).count()
-        self._dml_apply(
+        self._replace(
             table,
             update_projection(work, cond, assignments).select(*df.columns),
+            "dml",
         )
         return self.spark.range(1).select(F.lit(affected).alias("rows_affected"))
 
@@ -2942,7 +2951,7 @@ class Engine:
             if where else F.lit(True)
         )
         affected = df.filter(cond).count()
-        self._dml_apply(table, delete_filter(df, cond))
+        self._replace(table, delete_filter(df, cond), "dml")
         return self.spark.range(1).select(F.lit(affected).alias("rows_affected"))
 
     def _spark_type_text(self, heavy_type: str) -> str:
@@ -2957,12 +2966,11 @@ class Engine:
         RENAME TABLE a TO b). Multiple comma-separated actions apply
         left to right like the reference's multi-clause form.
 
-        Copy-on-write semantics, consistent with the DML path: attached
-        temp views are replaced with the projected relation; managed
-        tables are rewritten via overwrite-saveAsTable (Spark v1 tables
-        can't drop or retype columns in place — the rewrite is the
-        explicit cost, the analogue of the reference's variable-length
-        column rebuild).
+        Copy-on-write semantics, consistent with the DML path: column
+        actions install the projected relation through _replace (Spark
+        v1 tables can't drop or retype columns in place — the rewrite
+        is the explicit cost, the analogue of the reference's
+        variable-length column rebuild); RENAME TO is metadata-only.
 
         Returns None when an action is not one of the recognized
         HeavyDB forms, so Spark-native ALTER statements
@@ -3080,34 +3088,11 @@ class Engine:
             raise AssertionError(f"unreachable: {action!r}")  # pre-scanned
 
         target = new_name or table
-        if self._is_temp_view(table):
-            if new_name:
-                df.createOrReplaceTempView(new_name)
-                self.spark.catalog.dropTempView(table)
-            else:
-                df.createOrReplaceTempView(table)
-        elif new_name and not _projection_changed(parsed):
-            # pure rename: metadata-only native DDL, no data rewrite
+        if _projection_changed(parsed):
+            self._replace(table, df, "alter")
+        if new_name:
+            # metadata-only for a managed table and for a temp view alike
             self.spark.sql(f"ALTER TABLE {table} RENAME TO {new_name}")
-        else:
-            # stage-and-swap: Spark can't overwrite a table its plan
-            # reads, and collect() would materialize on the driver —
-            # write distributed to a staging table, then swap names
-            # (original parked, never dropped first — see _swap_tables)
-            # preserving any CLUSTERED BY bucketing layout.
-            n_buckets, bucket_cols = self._table_bucketing(table)
-            bucket_cols = [c for c in bucket_cols if c in df.columns]
-            staging = f"{target}__alter_staging"
-            self._clear_stale_staging(staging)
-            writer = df.write.mode("errorifexists").format("parquet")
-            if n_buckets and bucket_cols:
-                writer = writer.bucketBy(n_buckets, *bucket_cols).sortBy(
-                    *bucket_cols
-                )
-            writer.saveAsTable(staging)
-            self._swap_tables(staging, table, f"{table}__alter_old")
-            if new_name:
-                self.spark.sql(f"ALTER TABLE {table} RENAME TO {new_name}")
         # apply the TIME-registry mutations only now that the rewrite
         # (and any RENAME TO) committed; the pop+reassign also MOVES
         # the entries when the table was renamed
@@ -3425,7 +3410,7 @@ class Engine:
         temp views get the copy-on-write empty-replacement the DML
         path uses."""
         if self._is_temp_view(table):
-            self.spark.table(table).limit(0).createOrReplaceTempView(table)
+            self._replace(table, self.spark.table(table).limit(0), "truncate")
         else:
             self.spark.sql(f"TRUNCATE TABLE {table}")
         return self.spark.createDataFrame(
@@ -3506,8 +3491,6 @@ class Engine:
                     f"RESULT_CACHE must be on/off, got {val!r}"
                 )
             self.result_cache = on in ("on", "true")
-            if not self.result_cache:
-                self._invalidate_result_cache()
         elif key == "approx_median_sketch":
             on = val.strip().lower()
             if on not in ("on", "off", "true", "false"):
@@ -3728,10 +3711,7 @@ class Engine:
         # checkpoint: the file parses ONCE for both count and append
         loaded = loaded.localCheckpoint(eager=True)
         n = loaded.count()
-        if self._is_temp_view(table):
-            target.unionByName(loaded).createOrReplaceTempView(table)
-        else:
-            loaded.write.insertInto(table)
+        self._append(table, loaded)
         return self.spark.createDataFrame(
             [(table, n)], "table_name STRING, rows_loaded BIGINT"
         )

@@ -139,6 +139,51 @@ def _looks_like_repo_path(token: str) -> bool:
     return bool(re.fullmatch(r"[\w\-]+\.(py|md|json|toml|cfg|txt)", token))
 
 
+def _package_trees() -> list[tuple[str, ast.Module]]:
+    out = []
+    for path in _py_files("heavydb_spark"):
+        with open(path, encoding="utf-8") as f:
+            out.append((os.path.relpath(path, ROOT), ast.parse(f.read(), path)))
+    return out
+
+
+@pytest.mark.parametrize("attr", ["_swap_tables", "insertInto"])
+def test_one_write_path(attr):
+    """Every table rewrite stages and swaps inside Engine._replace, and
+    every append writes inside Engine._append; a second call site is a
+    second copy of the write path, with its own temp-view test and
+    cache-invalidation order."""
+    calls = [
+        f"{rel}:{n.lineno}"
+        for rel, tree in _package_trees()
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        and n.func.attr == attr
+    ]
+    assert len(calls) == 1, f"{attr} called at {calls}"
+
+
+def test_temp_view_test_asks_the_session_catalog():
+    """Listing the catalog builds a descriptor per table (hundreds of
+    ms with a dozen views) and compares names by exact case, unlike
+    Spark's own resolution."""
+    trees = _package_trees()
+    (fn,) = [n for _, tree in trees for n in ast.walk(tree)
+             if isinstance(n, ast.FunctionDef) and n.name == "_is_temp_view"]
+    attrs = {n.attr for n in ast.walk(fn) if isinstance(n, ast.Attribute)}
+    assert "isTempView" in attrs and "listTables" not in attrs
+    exact = [
+        f"{rel}:{n.lineno}"
+        for rel, tree in trees
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Compare)
+        and any(isinstance(o, ast.Eq) for o in n.ops)
+        and any(isinstance(c, ast.Constant) and c.value == "TEMPORARY"
+                for c in n.comparators)
+    ]
+    assert not exact, f"listing-based temp-view tests at {exact}"
+
+
 def test_registered_function_bodies_stay_small(spark):
     from heavydb_spark.functions import register_all
 
