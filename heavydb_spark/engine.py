@@ -3088,6 +3088,13 @@ class Engine:
             raise AssertionError(f"unreachable: {action!r}")  # pre-scanned
 
         target = new_name or table
+        # a rename onto a name in use fails before the rewrite, so the
+        # failed statement leaves the table as it was
+        if new_name and (self._is_temp_view(new_name)
+                         or self.spark.catalog.tableExists(new_name)):
+            raise ValueError(
+                f"ALTER TABLE {table}: RENAME TO target {new_name} "
+                "already exists")
         if _projection_changed(parsed):
             self._replace(table, df, "alter")
         if new_name:
@@ -3631,15 +3638,15 @@ class Engine:
             return self.spark.createDataFrame(
                 [(n,) for n in fns], "name STRING"
             )
-        from heavydb_spark.functions.geo import _GEO_SQL_FUNCS
+        from heavydb_spark.functions import FUNCTIONS
 
         sig_re = re.compile(
             r"FUNCTION\s+\w+\s*\((.*?)\)\s*RETURNS\s+([\w<>:,.\s]+?)\s+RETURN",
             re.IGNORECASE | re.DOTALL,
         )
         sigs = {}
-        for fname, body in _GEO_SQL_FUNCS.items():
-            m = sig_re.search(body)
+        for fname, body in FUNCTIONS.items():
+            m = isinstance(body, str) and sig_re.search(body)
             if m:
                 args = " ".join(m.group(1).split())
                 ret = " ".join(m.group(2).split())

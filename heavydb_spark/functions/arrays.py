@@ -11,7 +11,7 @@ the hot path. These are the primitives the similarity-search operators
 
 from __future__ import annotations
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -34,8 +34,9 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-# SQL UDF forms (Spark 4 SQL scalar functions, stay JVM-side).
-_SQL_FUNCS = {
+# SQL UDF forms (Spark 4 SQL scalar functions, stay JVM-side): the
+# family's declarations for `register_all` (functions/__init__.py).
+FUNCTIONS = {
     "dot_product": """
         CREATE OR REPLACE TEMPORARY FUNCTION dot_product(
             a ARRAY<DOUBLE>, b ARRAY<DOUBLE>) RETURNS DOUBLE
@@ -53,17 +54,3 @@ _SQL_FUNCS = {
                                    (acc, v) -> acc + v * v)))
     """,
 }
-
-
-def register_array_functions(spark: SparkSession) -> None:
-    import logging
-
-    for name, ddl in _SQL_FUNCS.items():
-        try:
-            spark.sql(ddl)
-        except Exception as exc:
-            # SQL scalar UDFs unavailable → DataFrame helpers still
-            # work; log the skipped function for traceability.
-            logging.getLogger(__name__).warning(
-                "array SQL function %s not registered: %s", name, exc
-            )

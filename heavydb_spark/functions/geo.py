@@ -16,11 +16,13 @@ strings.
 from __future__ import annotations
 
 import math
+import struct
 from types import SimpleNamespace
 
-import pandas as pd  # noqa: F401 - resolves pandas_udf type hints
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType
 
 from heavydb_spark import functions as _functions
 from heavydb_spark.functions.render import _E, _SqlB
@@ -704,7 +706,7 @@ def st_geomfromtext_multipoint(wkt: Column) -> Column:
 # QueryEngine/ExtensionFunctionsGeo.hpp (arbitrary SRID via proj);
 # here the projection math is closed-form. Each formula is written once
 # over the SQL-text backend and takes its per-CRS constants as values:
-# - registered with the constants as arguments (register_geo_functions),
+# - registered with the constants as arguments (register_all),
 #   it is what every Column builder calls, so a composed input is bound
 #   once, like the reference's EXTENSION_NOINLINE functions;
 # - with the constants inlined as literals it is the `*_sql` text the
@@ -1208,7 +1210,7 @@ def st_transform(p: Column, from_srid: int, to_srid: int) -> Column:
 # FUNCTION ... RETURN <expr>) so HeavyDB geo SQL strings run through
 # `engine.sql` and stay fully JVM-side (no Python UDF).
 
-_GEO_SQL_FUNCS = {
+FUNCTIONS = {
     "st_point": """
         CREATE OR REPLACE TEMPORARY FUNCTION st_point(x DOUBLE, y DOUBLE)
         RETURNS STRUCT<x: DOUBLE, y: DOUBLE>
@@ -1255,8 +1257,7 @@ _GEO_SQL_FUNCS = {
     # st_geomfromtext). Pure SQL bodies mirroring the Column helpers
     # above formula for formula (shoelace area with holes, area-weighted
     # centroid, even-odd ray cast, open-path length); st_intersects
-    # delegates to the GEOS overlay kernel (functions/geos.py), so it
-    # must register AFTER register_geos_functions (register_all order).
+    # delegates to the GEOS overlay kernel (functions/geos.py).
     # SQL scalar functions cannot overload, so st_astext takes the
     # POINT struct (the polygon spelling stays on the Column API).
     "st_area": """
@@ -1350,43 +1351,43 @@ _GEO_SQL_FUNCS = {
 # is out of scope (COVERAGE.md); ST_NRings is the reference spelling
 # of st_numrings; ST_IntersectsBox is the raw bounds-overlap test
 # (ExtensionFunctionsGeo.hpp ST_IntersectsBox).
-_GEO_SQL_FUNCS["st_within"] = """
+FUNCTIONS["st_within"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION st_within(
         p STRUCT<x: DOUBLE, y: DOUBLE>,
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>)
     RETURNS BOOLEAN RETURN st_contains(g, p)
 """
-_GEO_SQL_FUNCS["st_disjoint"] = """
+FUNCTIONS["st_disjoint"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION st_disjoint(
         a ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>,
         b ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>)
     RETURNS BOOLEAN RETURN NOT st_intersects(a, b)
 """
-_GEO_SQL_FUNCS["st_equals"] = """
+FUNCTIONS["st_equals"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION st_equals(
         a STRUCT<x: DOUBLE, y: DOUBLE>, b STRUCT<x: DOUBLE, y: DOUBLE>)
     RETURNS BOOLEAN RETURN st_distance(a, b) <= 0.0
 """
-_GEO_SQL_FUNCS["st_isempty"] = """
+FUNCTIONS["st_isempty"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION st_isempty(
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>)
     RETURNS BOOLEAN
     RETURN g IS NULL OR aggregate(transform(g, r -> size(r)), 0,
                                   (acc, v) -> acc + v) = 0
 """
-_GEO_SQL_FUNCS["st_isvalid"] = """
+FUNCTIONS["st_isvalid"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION st_isvalid(
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>)
     RETURNS BOOLEAN
     RETURN g IS NOT NULL AND size(g) > 0
            AND forall(g, r -> size(array_distinct(r)) >= 3)
 """
-_GEO_SQL_FUNCS["st_nrings"] = """
+FUNCTIONS["st_nrings"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION st_nrings(
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>)
     RETURNS INT RETURN size(g)
 """
-_GEO_SQL_FUNCS["st_intersectsbox"] = """
+FUNCTIONS["st_intersectsbox"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION st_intersectsbox(
         xmin1 DOUBLE, ymin1 DOUBLE, xmax1 DOUBLE, ymax1 DOUBLE,
         xmin2 DOUBLE, ymin2 DOUBLE, xmax2 DOUBLE, ymax2 DOUBLE)
@@ -1400,7 +1401,7 @@ _GEO_SQL_FUNCS["st_intersectsbox"] = """
 # from the point to the geometry's vertex set (the maximum over a
 # segment is attained at one of its endpoints, so the vertex max IS
 # the geometry max; ExtensionFunctionsGeo.hpp:3847-3930).
-_GEO_SQL_FUNCS["st_maxdistance"] = """
+FUNCTIONS["st_maxdistance"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION st_maxdistance(
         p STRUCT<x: DOUBLE, y: DOUBLE>,
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>)
@@ -1410,8 +1411,7 @@ _GEO_SQL_FUNCS["st_maxdistance"] = """
             sqrt((p.x - q.x) * (p.x - q.x) + (p.y - q.y) * (p.y - q.y))))
 """
 
-# Must register after st_maxdistance — the SQL body calls it.
-_GEO_SQL_FUNCS["st_dfullywithin"] = """
+FUNCTIONS["st_dfullywithin"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION st_dfullywithin(
         p STRUCT<x: DOUBLE, y: DOUBLE>,
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>, d DOUBLE)
@@ -1566,7 +1566,7 @@ _HAVERSINE_SEG = (
     " + cos(radians(s.ay)) * cos(radians(s.by))"
     "   * pow(sin((radians(s.bx) - radians(s.ax)) / 2), 2))))")
 
-_GEO_SQL_FUNCS["geo_kind"] = """
+FUNCTIONS["geo_kind"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION geo_kind(wkt STRING)
     RETURNS INT RETURN CASE
         WHEN upper(trim(wkt)) LIKE 'MULTIPOINT%' THEN 2
@@ -1582,7 +1582,7 @@ _GEO_SQL_FUNCS["geo_kind"] = """
 # (degenerate when the WKT ring already repeats its first point); the
 # open form appends a degenerate first-vertex segment to keep the
 # branch types aligned (zero length, on-path — harmless everywhere)
-_GEO_SQL_FUNCS["geo_segments"] = """
+FUNCTIONS["geo_segments"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION geo_segments(
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>, closed BOOLEAN)
     RETURNS ARRAY<STRUCT<ax: DOUBLE, ay: DOUBLE, bx: DOUBLE, by: DOUBLE>>
@@ -1612,7 +1612,7 @@ _GEO_SQL_FUNCS["geo_segments"] = """
 # NOT contained and measures to the hole boundary); otherwise the
 # minimum over the segment-pair cross product.  Boundary touches and
 # edge crossings surface as 0 through the segment distance.
-_GEO_SQL_FUNCS["st_distance_any"] = f"""
+FUNCTIONS["st_distance_any"] = f"""
     CREATE OR REPLACE TEMPORARY FUNCTION st_distance_any(
         a ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>, ka INT,
         b ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>, kb INT)
@@ -1638,7 +1638,7 @@ _GEO_SQL_FUNCS["st_distance_any"] = f"""
 
 # boundary-inclusive intersects (the reference's ST_Intersects counts
 # vertex/edge touches — GeoSpatial.Math corner-touch expectations)
-_GEO_SQL_FUNCS["st_intersects_any"] = """
+FUNCTIONS["st_intersects_any"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION st_intersects_any(
         a ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>, ka INT,
         b ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>, kb INT)
@@ -1647,7 +1647,7 @@ _GEO_SQL_FUNCS["st_intersects_any"] = """
 
 # ST_Length sums ALL member linestrings (ST_Length_MultiLineString,
 # ExtensionFunctionsGeo.hpp:1211); non-linear kinds are 0
-_GEO_SQL_FUNCS["st_length_any"] = f"""
+FUNCTIONS["st_length_any"] = f"""
     CREATE OR REPLACE TEMPORARY FUNCTION st_length_any(
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>, k INT)
     RETURNS DOUBLE RETURN CASE
@@ -1661,7 +1661,7 @@ _GEO_SQL_FUNCS["st_length_any"] = f"""
 # (ST_Perimeter_Polygon:1245); for MULTIPOLYGON every NON-HOLE ring
 # (perimeter_multipolygon sums each polygon's exterior — hole rings
 # classified even-odd, see _is_hole_sql)
-_GEO_SQL_FUNCS["st_perimeter_any"] = f"""
+FUNCTIONS["st_perimeter_any"] = f"""
     CREATE OR REPLACE TEMPORARY FUNCTION st_perimeter_any(
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>, k INT)
     RETURNS DOUBLE RETURN CASE
@@ -1678,7 +1678,7 @@ _GEO_SQL_FUNCS["st_perimeter_any"] = f"""
 # ST_Area subtracts hole rings: ring 1 positive + holes negative for
 # POLYGON (ST_Area_Polygon); per-ring even-odd sign for MULTIPOLYGON
 # (ST_Area_MultiPolygon sums polygon areas, each exterior minus holes)
-_GEO_SQL_FUNCS["st_area_any"] = f"""
+FUNCTIONS["st_area_any"] = f"""
     CREATE OR REPLACE TEMPORARY FUNCTION st_area_any(
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>, k INT)
     RETURNS DOUBLE RETURN CASE
@@ -1758,7 +1758,7 @@ def _centroid_any_sql():
 """
 
 
-_GEO_SQL_FUNCS["st_centroid_any"] = _centroid_any_sql()
+FUNCTIONS["st_centroid_any"] = _centroid_any_sql()
 
 # geos-backed ST_Equals for non-point geometries (GeospatialTest.cpp
 # :2961): true geometric equality, decided here as mutual
@@ -1792,14 +1792,14 @@ def _equals_any_sql():
 """
 
 
-_GEO_SQL_FUNCS["st_equals_any"] = _equals_any_sql()
+FUNCTIONS["st_equals_any"] = _equals_any_sql()
 
 # the transform stages the Column builders call
-_GEO_SQL_FUNCS.update(_transform_sql_funcs())
+FUNCTIONS.update(_transform_sql_funcs())
 
 # vertex-wise ring-set transform to web mercator (the SQL form's one
 # supported target; the DataFrame API carries the EPSG table)
-_GEO_SQL_FUNCS["st_transform_rings"] = """
+FUNCTIONS["st_transform_rings"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION st_transform_rings(
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>, srid INT)
     RETURNS ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>> RETURN CASE
@@ -1821,20 +1821,20 @@ _GEO_SQL_FUNCS["st_transform_rings"] = """
 
 # geodesic kernels (GEOGRAPHY surface): the reference's haversine with
 # its exact 6372797.560856 m radius (ExtensionFunctions.hpp:433-446)
-_GEO_SQL_FUNCS["st_distance_geog"] = """
+FUNCTIONS["st_distance_geog"] = """
     CREATE OR REPLACE TEMPORARY FUNCTION st_distance_geog(
         a STRUCT<x: DOUBLE, y: DOUBLE>, b STRUCT<x: DOUBLE, y: DOUBLE>)
     RETURNS DOUBLE RETURN distance_in_meters(a.x, a.y, b.x, b.y)
 """
 
-_GEO_SQL_FUNCS["st_length_geog"] = f"""
+FUNCTIONS["st_length_geog"] = f"""
     CREATE OR REPLACE TEMPORARY FUNCTION st_length_geog(
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>)
     RETURNS DOUBLE RETURN aggregate(geo_segments(g, false),
         CAST(0.0 AS DOUBLE), (acc, s) -> acc + {_HAVERSINE_SEG})
 """
 
-_GEO_SQL_FUNCS["st_perimeter_geog"] = f"""
+FUNCTIONS["st_perimeter_geog"] = f"""
     CREATE OR REPLACE TEMPORARY FUNCTION st_perimeter_geog(
         g ARRAY<ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>, k INT)
     RETURNS DOUBLE RETURN CASE
@@ -1863,98 +1863,70 @@ def st_maxdistance(p: Column, g: Column) -> Column:
 
 
 def _wkb_le(geom_type: int, coords: list) -> bytes:
-    import struct
-
     out = [b"\x01", struct.pack("<I", geom_type)]
     out += [struct.pack("<d", v) for v in coords]
     return b"".join(out)
 
 
-def _make_wkb_udfs():
-    """ST_AsBinary / ST_AsWkb exports (ExtensionFunctionsGeo.hpp
-    ST_AsBinary/ST_AsWkb): standard little-endian WKB. IEEE-754 byte
-    packing has no SQL builtin, so these are the one geo export family
-    that runs as Arrow-batched pandas kernels (geometry-local,
-    map-only)."""
-    import struct
 
-    import pandas as pd
 
-    @F.pandas_udf("binary")
-    def point_udf(s: pd.DataFrame) -> pd.Series:
-        # a struct argument arrives as a DataFrame with the fields as
-        # columns (Arrow struct -> pandas)
-        return pd.Series(
-            [
-                None
-                if pd.isna(x) or pd.isna(y)
-                else _wkb_le(1, [float(x), float(y)])
-                for x, y in zip(s["x"], s["y"])
-            ]
-        )
+# ST_AsBinary / ST_AsWkb exports (ExtensionFunctionsGeo.hpp
+# ST_AsBinary/ST_AsWkb): standard little-endian WKB. IEEE-754 byte
+# packing has no SQL builtin, so these are the one geo export family
+# that runs as Arrow-batched pandas kernels (geometry-local, map-only).
 
-    @F.pandas_udf("binary")
-    def line_udf(s: pd.Series) -> pd.Series:
-        out = []
-        for ring in s:
-            if ring is None:
-                out.append(None)
-                continue
+@F.pandas_udf(BinaryType())
+def _point_wkb(s: pd.DataFrame) -> pd.Series:
+    # a struct argument arrives as a DataFrame with the fields as
+    # columns (Arrow struct -> pandas)
+    return pd.Series(
+        [
+            None
+            if pd.isna(x) or pd.isna(y)
+            else _wkb_le(1, [float(x), float(y)])
+            for x, y in zip(s["x"], s["y"])
+        ]
+    )
+
+
+@F.pandas_udf(BinaryType())
+def _line_wkb(s: pd.Series) -> pd.Series:
+    out = []
+    for ring in s:
+        if ring is None:
+            out.append(None)
+            continue
+        pts = [(float(q["x"]), float(q["y"])) for q in ring]
+        body = b"\x01" + struct.pack("<II", 2, len(pts))
+        body += b"".join(struct.pack("<dd", x, y) for x, y in pts)
+        out.append(body)
+    return pd.Series(out)
+
+
+@F.pandas_udf(BinaryType())
+def _poly_wkb(s: pd.Series) -> pd.Series:
+    out = []
+    for rings in s:
+        if rings is None:
+            out.append(None)
+            continue
+        body = b"\x01" + struct.pack("<II", 3, len(rings))
+        for ring in rings:
             pts = [(float(q["x"]), float(q["y"])) for q in ring]
-            body = b"\x01" + struct.pack("<II", 2, len(pts))
+            if pts and pts[0] != pts[-1]:
+                pts.append(pts[0])
+            body += struct.pack("<I", len(pts))
             body += b"".join(struct.pack("<dd", x, y) for x, y in pts)
-            out.append(body)
-        return pd.Series(out)
-
-    @F.pandas_udf("binary")
-    def poly_udf(s: pd.Series) -> pd.Series:
-        out = []
-        for rings in s:
-            if rings is None:
-                out.append(None)
-                continue
-            body = b"\x01" + struct.pack("<II", 3, len(rings))
-            for ring in rings:
-                pts = [(float(q["x"]), float(q["y"])) for q in ring]
-                if pts and pts[0] != pts[-1]:
-                    pts.append(pts[0])
-                body += struct.pack("<I", len(pts))
-                body += b"".join(struct.pack("<dd", x, y) for x, y in pts)
-            out.append(body)
-        return pd.Series(out)
-
-    return point_udf, line_udf, poly_udf
+        out.append(body)
+    return pd.Series(out)
 
 
-_WKB_UDFS: list = []
-
-
-def _wkb_udfs():
-    # created lazily: pandas_udf return-type parsing needs an active
-    # session, which does not exist at import time
-    if not _WKB_UDFS:
-        _WKB_UDFS.extend(_make_wkb_udfs())
-    return _WKB_UDFS
-
-
-def register_geo_functions(spark) -> None:
-    import logging
-
-    for name, ddl in _GEO_SQL_FUNCS.items():
-        try:
-            spark.sql(ddl)
-        except Exception as exc:
-            # SQL scalar UDFs unavailable -> DataFrame helpers still
-            # work; log which function failed so a later
-            # UNRESOLVED_ROUTINE is traceable to its cause.
-            logging.getLogger(__name__).warning(
-                "geo SQL function %s not registered: %s", name, exc
-            )
-    # WKB exports by name for SQL strings (ST_AsWkb is the reference's
-    # alias of ST_AsBinary; per-type names because SQL scalar functions
-    # cannot overload by geometry type)
-    point_udf, line_udf, poly_udf = _wkb_udfs()
-    spark.udf.register("st_asbinary", point_udf)
-    spark.udf.register("st_aswkb", point_udf)
-    spark.udf.register("st_asbinary_line", line_udf)
-    spark.udf.register("st_asbinary_poly", poly_udf)
+# WKB exports by name for SQL strings (ST_AsWkb is the reference's
+# alias of ST_AsBinary; per-type names because SQL scalar functions
+# cannot overload by geometry type)
+FUNCTIONS.update(
+    st_asbinary=_point_wkb,
+    st_aswkb=_point_wkb,
+    st_asbinary_line=_line_wkb,
+    st_asbinary_poly=_poly_wkb,
+)

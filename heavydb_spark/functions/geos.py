@@ -331,22 +331,26 @@ def _buffer_shapes(rings, r, n_segments, closed, include_base):
 
 
 # ------------------------------------------------------------- Column surface
+#
+# One Arrow-batched pandas kernel per operation, shared by the Column
+# API and by the SQL names `register_all` registers (reference surface:
+# ST_Union/ST_Buffer as SQL functions through the GEOS runtime).
+
+
+@F.pandas_udf(POLYGON_T)
+def _hull(s: pd.Series) -> pd.Series:
+    out = []
+    for p in s:
+        hull = _hull_points([_xy(q) for q in p])
+        out.append([[{"x": x, "y": y} for (x, y) in hull]])
+    return pd.Series(out)
 
 
 def st_convexhull(pts: Column) -> Column:
     """ST_ConvexHull(MULTIPOINT) -> POLYGON (single CCW ring).
     RelAlgTranslatorGeo.cpp:810-819 GEOS delegation, reimplemented as
     monotone chain in a pandas UDF (geometry-local)."""
-
-    @F.pandas_udf(POLYGON_T)
-    def _hull_udf(s: pd.Series) -> pd.Series:
-        out = []
-        for p in s:
-            hull = _hull_points([_xy(q) for q in p])
-            out.append([[{"x": x, "y": y} for (x, y) in hull]])
-        return pd.Series(out)
-
-    return _hull_udf(pts)
+    return _hull(pts)
 
 
 def _concave_udf(k: int):
@@ -376,7 +380,7 @@ def st_concavehull(pts: Column, k: int = 3) -> Column:
     return _concave_udf(k)(pts)
 
 
-def _binary_overlay(a: Column, b: Column, keep) -> Column:
+def _overlay(keep):
     @F.pandas_udf(MULTIPOLYGON_T)
     def _udf(sa: pd.Series, sb: pd.Series) -> pd.Series:
         out = []
@@ -387,26 +391,31 @@ def _binary_overlay(a: Column, b: Column, keep) -> Column:
             out.append(_to_arrow_mp(quads))
         return pd.Series(out)
 
-    return _udf(a, b)
+    return _udf
+
+
+_UNION = _overlay(lambda p: p[0] or p[1])
+_INTERSECTION = _overlay(lambda p: p[0] and p[1])
+_DIFFERENCE = _overlay(lambda p: p[0] and not p[1])
 
 
 def st_union(a: Column, b: Column) -> Column:
     """ST_Union(POLYGON, POLYGON) -> MULTIPOLYGON of trapezoids
     covering exactly the union region (RelAlgTranslatorGeo.cpp:333
     GEOS ST_Union)."""
-    return _binary_overlay(a, b, lambda p: p[0] or p[1])
+    return _UNION(a, b)
 
 
 def st_intersection(a: Column, b: Column) -> Column:
     """ST_Intersection(POLYGON, POLYGON) -> MULTIPOLYGON (exact, vs the
     envelope-only pre-pass in functions/geo.py st_intersection_bbox)."""
-    return _binary_overlay(a, b, lambda p: p[0] and p[1])
+    return _INTERSECTION(a, b)
 
 
 def st_difference(a: Column, b: Column) -> Column:
     """ST_Difference(POLYGON, POLYGON) -> MULTIPOLYGON
     (RelAlgTranslatorGeo.cpp:334 GEOS ST_Difference)."""
-    return _binary_overlay(a, b, lambda p: p[0] and not p[1])
+    return _DIFFERENCE(a, b)
 
 
 def st_buffer_linestring(
@@ -454,107 +463,86 @@ def st_buffer_polygon(
     return _udf(poly)
 
 
-# ----------------------------------------------------- SQL registration
+# ----------------------------------------------------- SQL declarations
 #
-# The overlay/hull kernels registered for `engine.sql` — geo SQL
-# strings call them directly (reference surface: ST_Union/ST_Buffer as
-# SQL functions through the GEOS runtime). pandas UDFs registered via
-# spark.udf.register keep the same Arrow-batched execution.
+# The SQL buffer forms bind the radius per row. The dialect rewrites
+# single-name ST_Buffer(g, r) to one of them by static geometry tag
+# (RelAlgTranslatorGeo.cpp:810-819 overloads by type): st_buffer_line
+# takes the bare point path (element_at(g, 1) of a normalized
+# geometry), st_buffer_poly the ring array, st_buffer_any dispatches at
+# runtime when the tag is not statically known.
 
 
-def register_geos_functions(spark) -> None:
-    @F.pandas_udf(POLYGON_T)
-    def _hull(s: pd.Series) -> pd.Series:
-        out = []
-        for p in s:
-            hull = _hull_points([_xy(q) for q in p])
-            out.append([[{"x": x, "y": y} for (x, y) in hull]])
-        return pd.Series(out)
+@F.pandas_udf(MULTIPOLYGON_T)
+def _buffer_line(sl: pd.Series, sr: pd.Series) -> pd.Series:
+    out = []
+    for line, rad in zip(sl, sr):
+        pts = [_xy(q) for q in line]
+        shapes = _buffer_shapes(
+            [pts], float(rad), 8, closed=False, include_base=False
+        )
+        out.append(_to_arrow_mp(_boolean_trapezoids(shapes, any)))
+    return pd.Series(out)
 
-    def _overlay(keep):
-        @F.pandas_udf(MULTIPOLYGON_T)
-        def _udf(sa: pd.Series, sb: pd.Series) -> pd.Series:
-            out = []
-            for pa, pb in zip(sa, sb):
-                out.append(
-                    _to_arrow_mp(
-                        _boolean_trapezoids([_norm_poly(pa), _norm_poly(pb)], keep)
-                    )
-                )
-            return pd.Series(out)
 
-        return _udf
+@F.pandas_udf(MULTIPOLYGON_T)
+def _buffer_poly(sp: pd.Series, sr: pd.Series) -> pd.Series:
+    out = []
+    for p, rad in zip(sp, sr):
+        rings = _norm_poly(p)
+        shapes = _buffer_shapes(
+            rings, float(rad), 8, closed=True, include_base=True
+        )
+        out.append(_to_arrow_mp(_boolean_trapezoids(shapes, any)))
+    return pd.Series(out)
 
-    spark.udf.register("st_convexhull", _hull)
-    # SQL form fixes k=3 (SQL scalar functions can't take a Python
-    # int); the Column API exposes the full neighbor budget
-    spark.udf.register("st_concavehull", _concave_udf(3))
-    @F.pandas_udf(MULTIPOLYGON_T)
-    def _buffer_line(sl: pd.Series, sr: pd.Series) -> pd.Series:
-        out = []
-        for line, rad in zip(sl, sr):
-            pts = [_xy(q) for q in line]
+
+@F.pandas_udf(MULTIPOLYGON_T)
+def _buffer_any(sg: pd.Series, sr: pd.Series) -> pd.Series:
+    # Runtime tag dispatch over the normalized ARRAY<ARRAY<point>>
+    # form: 1 ring of 1 point = POINT; 1 open ring = LINESTRING;
+    # anything closed or multi-ring = POLYGON. Used by the dialect's
+    # single-name ST_Buffer when the static tag is unknown.
+    out = []
+    for g, rad in zip(sg, sr):
+        if g is None or len(g) == 0:
+            out.append([])
+            continue
+        raw0 = list(g[0]) if len(g) else []
+        wkt_closed = len(g) > 1 or (
+            len(raw0) > 1
+            and _xy(raw0[0]) == _xy(raw0[-1])
+        )
+        rings = _norm_poly(g)
+        rad = float(rad)
+        if len(rings) == 1 and len(rings[0]) == 1:
+            # 32-gon, matching the registered ST_Buffer(point, r)
+            # SQL form — the same point must buffer identically on
+            # the static and runtime dispatch routes
+            x, y = rings[0][0]
+            shapes = [[_ngon(x, y, rad, 32)]]
+        elif not wkt_closed:
             shapes = _buffer_shapes(
-                [pts], float(rad), 8, closed=False, include_base=False
+                rings, rad, 8, closed=False, include_base=False
             )
-            out.append(_to_arrow_mp(_boolean_trapezoids(shapes, any)))
-        return pd.Series(out)
-
-    @F.pandas_udf(MULTIPOLYGON_T)
-    def _buffer_poly(sp: pd.Series, sr: pd.Series) -> pd.Series:
-        out = []
-        for p, rad in zip(sp, sr):
-            rings = _norm_poly(p)
+        else:
             shapes = _buffer_shapes(
-                rings, float(rad), 8, closed=True, include_base=True
+                rings, rad, 8, closed=True, include_base=True
             )
-            out.append(_to_arrow_mp(_boolean_trapezoids(shapes, any)))
-        return pd.Series(out)
+        out.append(_to_arrow_mp(_boolean_trapezoids(shapes, any)))
+    return pd.Series(out)
 
-    @F.pandas_udf(MULTIPOLYGON_T)
-    def _buffer_any(sg: pd.Series, sr: pd.Series) -> pd.Series:
-        # Runtime tag dispatch over the normalized ARRAY<ARRAY<point>>
-        # form: 1 ring of 1 point = POINT; 1 open ring = LINESTRING;
-        # anything closed or multi-ring = POLYGON. Used by the dialect's
-        # single-name ST_Buffer when the static tag is unknown.
-        out = []
-        for g, rad in zip(sg, sr):
-            if g is None or len(g) == 0:
-                out.append([])
-                continue
-            raw0 = list(g[0]) if len(g) else []
-            wkt_closed = len(g) > 1 or (
-                len(raw0) > 1
-                and _xy(raw0[0]) == _xy(raw0[-1])
-            )
-            rings = _norm_poly(g)
-            rad = float(rad)
-            if len(rings) == 1 and len(rings[0]) == 1:
-                # 32-gon, matching the registered ST_Buffer(point, r)
-                # SQL form — the same point must buffer identically on
-                # the static and runtime dispatch routes
-                x, y = rings[0][0]
-                shapes = [[_ngon(x, y, rad, 32)]]
-            elif not wkt_closed:
-                shapes = _buffer_shapes(
-                    rings, rad, 8, closed=False, include_base=False
-                )
-            else:
-                shapes = _buffer_shapes(
-                    rings, rad, 8, closed=True, include_base=True
-                )
-            out.append(_to_arrow_mp(_boolean_trapezoids(shapes, any)))
-        return pd.Series(out)
 
-    # SQL spellings: the dialect rewrites single-name ST_Buffer(g, r)
-    # to one of these by static geometry tag (RelAlgTranslatorGeo.cpp:
-    # 810-819 overloads by type); st_buffer_line takes the bare point
-    # path (element_at(g, 1) of a normalized geometry), st_buffer_poly
-    # the ring array, st_buffer_any dispatches at runtime when the tag
-    # is not statically known; radius binds per row.
-    spark.udf.register("st_buffer_line", _buffer_line)
-    spark.udf.register("st_buffer_poly", _buffer_poly)
-    spark.udf.register("st_buffer_any", _buffer_any)
-    spark.udf.register("st_union", _overlay(lambda p: p[0] or p[1]))
-    spark.udf.register("st_intersection", _overlay(lambda p: p[0] and p[1]))
-    spark.udf.register("st_difference", _overlay(lambda p: p[0] and not p[1]))
+# The family's declarations for `register_all` (functions/__init__.py).
+# The SQL form of the concave hull fixes k=3 (a SQL function cannot
+# take a Python int); the Column API exposes the full neighbor budget.
+FUNCTIONS = {
+    "st_convexhull": _hull,
+    "st_concavehull": _concave_udf(3),
+    "st_buffer_line": _buffer_line,
+    "st_buffer_poly": _buffer_poly,
+    "st_buffer_any": _buffer_any,
+    "st_union": _UNION,
+    "st_intersection": _INTERSECTION,
+    "st_difference": _DIFFERENCE,
+}

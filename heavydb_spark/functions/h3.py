@@ -151,7 +151,7 @@ def _is_valid(cell):
 # ------------------------------------------------------- public surface
 #
 # Each Column builder calls the registered SQL function of the same
-# reference name (register_h3_functions below), so a composed input is
+# reference name (declared in FUNCTIONS below), so a composed input is
 # bound once and the plan stays the size of one formula. The `*_sql`
 # text builders inline their input: they are the portable form the
 # DuckDB oracles run.
@@ -252,7 +252,7 @@ def h3_cell_to_boundary(cell) -> Column:
     return _functions._call("h3_celltoboundary", _colwrap_cell(cell))
 
 
-# ------------------------------------------------- SQL registration
+# ------------------------------------------------- SQL declarations
 
 
 def _hex_vertices(n: int):
@@ -264,8 +264,8 @@ def _hex_vertices(n: int):
         yield (lon + size * math.cos(ang)).s, (lat + size * math.sin(ang)).s
 
 
-def register_h3_functions(spark) -> None:
-    """Register the H3_* family as Spark SQL scalar functions so the
+def _declarations() -> dict[str, str]:
+    """Declare the H3_* family as Spark SQL scalar functions so the
     reference's H3 SQL runs through `engine.sql` (all codegen). As in the
     reference, one formula takes the resolution at run time:
     `h3_lonlattocell` passes the resolution's cell size to
@@ -290,7 +290,7 @@ def register_h3_functions(spark) -> None:
         return (f"CASE WHEN resolution BETWEEN 0 AND 15 THEN {call} ELSE CAST("
                 f"raise_error('{name}: invalid resolution') AS BIGINT) END")
 
-    for sig, body in (
+    declared = (
         ("h3_lonlattocell_sized(lon DOUBLE, lat DOUBLE, size DOUBLE, "
          "resolution INT) RETURNS BIGINT", cell.s),
         ("h3_lonlattocell(lon DOUBLE, lat DOUBLE, resolution INT) "
@@ -324,5 +324,11 @@ def register_h3_functions(spark) -> None:
          f"concat('POLYGON ((', concat_ws(', ', {wkt}), '))')"),
         ("h3_celltoboundary_wkt(cell BIGINT) RETURNS STRING",
          f"h3_hexwkt({center_size})"),
-    ):
-        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {sig} RETURN {body}")
+    )
+    return {sig[:sig.index("(")]:
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {sig} RETURN {body}"
+            for sig, body in declared}
+
+
+# The family's declarations for `register_all` (functions/__init__.py).
+FUNCTIONS = _declarations()

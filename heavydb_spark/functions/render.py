@@ -574,9 +574,9 @@ def is_point_size_in_merc_view_sql(lon, lat, meters, min_lon, max_lon,
                               min_lon, max_lon, min_lat, max_lat).s
 
 
-# ------------------------------------------------- SQL registration
+# ------------------------------------------------- SQL declarations
 #
-# Register the family as Spark SQL scalar functions (all-args-dynamic
+# Declare the family as Spark SQL scalar functions (all-args-dynamic
 # bodies generated from the same formulas) so HeavyDB render SQL runs
 # through `engine.sql` fully JVM-side.
 
@@ -639,20 +639,19 @@ _VIEW_NAME_ALIASES = {
 }
 
 
-def register_render_functions(spark) -> None:
-    for name, (params, body) in _RENDER_PARAM_SETS.items():
-        ret = "BOOLEAN" if name.startswith("is_") else "DOUBLE"
-        arglist = ", ".join(f"{p} DOUBLE" for p in params)
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({arglist}) "
-            f"RETURNS {ret} RETURN {body(params)}"
-        )
-    for alias, target in _VIEW_NAME_ALIASES.items():
-        params, _ = _RENDER_PARAM_SETS[target]
-        ret = "BOOLEAN" if alias.startswith("is_") else "DOUBLE"
-        arglist = ", ".join(f"{p} DOUBLE" for p in params)
-        callargs = ", ".join(params)
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {alias}({arglist}) "
-            f"RETURNS {ret} RETURN {target}({callargs})"
-        )
+def _declare(name: str, params: tuple, body: str) -> str:
+    ret = "BOOLEAN" if name.startswith("is_") else "DOUBLE"
+    arglist = ", ".join(f"{p} DOUBLE" for p in params)
+    return (f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({arglist}) "
+            f"RETURNS {ret} RETURN {body}")
+
+
+# The family's declarations for `register_all` (functions/__init__.py).
+FUNCTIONS = {
+    name: _declare(name, params, body(params))
+    for name, (params, body) in _RENDER_PARAM_SETS.items()
+}
+for alias, target in _VIEW_NAME_ALIASES.items():
+    params = _RENDER_PARAM_SETS[target][0]
+    FUNCTIONS[alias] = _declare(alias, params,
+                                f"{target}({', '.join(params)})")

@@ -15,7 +15,6 @@ All are registered for SQL use; DataFrame users import the wrappers.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType, StringType
@@ -152,16 +151,6 @@ def hash_heavy(s: pd.Series, seed: pd.Series) -> pd.Series:
     )
 
 
-def register_string_functions(spark: SparkSession) -> None:
-    spark.udf.register(
-        "jarowinkler_similarity", jarowinkler_similarity_ref
-    )
-    spark.udf.register("url_encode", url_encode)
-    spark.udf.register("url_decode", url_decode)
-    spark.udf.register("hash_heavy", hash_heavy)
-    register_initcap_heavy(spark)
-
-
 # DataFrame-side conveniences (JVM-native where possible) -----------------
 
 def base64_encode(col):  # HeavyDB BASE64_ENCODE (sqldefs.h:121)
@@ -194,9 +183,15 @@ def initcap_heavy(col):
     return F.aggregate(chars, init, step, lambda acc: acc["s"])
 
 
-def register_initcap_heavy(spark: SparkSession) -> None:
-    delims = _INITCAP_DELIMS.replace("\\", "\\\\").replace("'", "''")
-    spark.sql(f"""
+_INITCAP_SQL_DELIMS = _INITCAP_DELIMS.replace("\\", "\\\\").replace("'", "''")
+
+# The family's declarations for `register_all` (functions/__init__.py).
+FUNCTIONS = {
+    "jarowinkler_similarity": jarowinkler_similarity_ref,
+    "url_encode": url_encode,
+    "url_decode": url_decode,
+    "hash_heavy": hash_heavy,
+    "initcap_heavy": f"""
         CREATE OR REPLACE TEMPORARY FUNCTION initcap_heavy(s STRING)
         RETURNS STRING
         RETURN aggregate(
@@ -204,6 +199,7 @@ def register_initcap_heavy(spark: SparkSession) -> None:
             named_struct('s', '', 'd', true),
             (acc, c) -> named_struct(
                 's', concat(acc.s, CASE WHEN acc.d THEN upper(c) ELSE lower(c) END),
-                'd', instr('{delims}', c) > 0),
+                'd', instr('{_INITCAP_SQL_DELIMS}', c) > 0),
             acc -> acc.s)
-    """)
+    """,
+}

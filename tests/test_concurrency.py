@@ -12,6 +12,7 @@ Engine SQL surface on separate tables.
 
 from __future__ import annotations
 
+import re
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
@@ -341,3 +342,45 @@ def test_alter_session_survives_concurrent_sql_arrow(engine, spark):
         assert spark.conf.get("spark.sql.adaptive.enabled") == before[1]
     finally:
         spark.conf.set(key, before[0])
+
+
+def test_concurrent_first_register_all_registers_once(spark, monkeypatch):
+    """Four threads calling register_all on a session whose memo was
+    discarded: each declared function is registered exactly once, and
+    no worker thread of the registration pool outlives the calls."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql.udf import UDFRegistration
+
+    from heavydb_spark import functions
+
+    names: list[str] = []
+    real_sql, real_register = SparkSession.sql, UDFRegistration.register
+
+    def sql(self, text, *a, **kw):
+        m = re.match(r"\s*CREATE OR REPLACE TEMPORARY FUNCTION (\w+)", text)
+        if m:
+            names.append(m[1])
+        return real_sql(self, text, *a, **kw)
+
+    def register(self, name, f, *a, **kw):
+        names.append(name)
+        return real_register(self, name, f, *a, **kw)
+
+    monkeypatch.setattr(SparkSession, "sql", sql)
+    monkeypatch.setattr(UDFRegistration, "register", register)
+    functions._REGISTERED.discard(spark)
+    start = threading.Barrier(4)
+
+    def first_call(_i):
+        start.wait()
+        functions.register_all(spark)
+
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            list(pool.map(first_call, range(4), timeout=300))
+    finally:
+        functions.register_all(spark)
+    assert spark in functions._REGISTERED
+    assert sorted(names) == sorted(functions.FUNCTIONS)
+    assert not [t.name for t in threading.enumerate()
+                if t.name.startswith("register_all")]

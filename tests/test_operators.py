@@ -1306,9 +1306,9 @@ def test_concave_hull_degenerate_and_escalation():
 
 
 def test_concave_hull_sql_registration(spark):
-    from heavydb_spark.functions.geos import register_geos_functions
+    from heavydb_spark.functions import register_all
 
-    register_geos_functions(spark)
+    register_all(spark)
     row = spark.sql(
         """
         SELECT st_concavehull(array(

@@ -185,16 +185,59 @@ def test_temp_view_test_asks_the_session_catalog():
 
 
 def test_registered_function_bodies_stay_small(spark):
-    from heavydb_spark.functions import register_all
+    from heavydb_spark.functions import FUNCTIONS, register_all
 
     texts: list[str] = []
+    udfs: list[str] = []
     register_all(SimpleNamespace(
-        sql=texts.append, udf=SimpleNamespace(register=lambda name, f: None)))
+        sql=texts.append,
+        udf=SimpleNamespace(register=lambda name, f: udfs.append(name))))
+    declared = [t for t in FUNCTIONS.values() if isinstance(t, str)]
+    assert sorted(texts) == sorted(declared)
+    assert len(udfs) == len(FUNCTIONS) - len(declared)
     big = [
         f"{_FUNCTION_NAME.search(t).group(1)}: {len(t)} characters"
         for t in texts if len(t) > MAX_FUNCTION_TEXT
     ]
     assert texts and not big, "function bodies too long:\n" + "\n".join(big)
+
+
+# The modules that declare SQL functions, and the one that registers them.
+_FAMILIES = tuple(os.path.join("heavydb_spark", "functions", f"{m}.py")
+                  for m in ("strings", "arrays", "geos", "geo", "render", "h3"))
+_REGISTRAR = os.path.join("heavydb_spark", "functions", "__init__.py")
+_CREATE_FUNCTION = re.compile(
+    r"CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?FUNCTION", re.I)
+
+
+def test_functions_register_from_one_table():
+    """SQL function texts live in the family modules' declaration
+    tables and reach Spark only through `register_all`: a second
+    registration path orders itself by call sequence again, which the
+    table's derived dependencies replace."""
+    stray = []
+    for path in _py_files("heavydb_spark"):
+        rel = os.path.relpath(path, ROOT)
+        with open(path, encoding="utf-8") as f:
+            source = f.read()
+        docs = _docstring_starts(source)
+        for n in ast.walk(ast.parse(source, path)):
+            if (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                    and (n.lineno, n.col_offset) not in docs
+                    and rel not in _FAMILIES
+                    and _CREATE_FUNCTION.search(n.value)):
+                stray.append(f"{rel}:{n.lineno} CREATE FUNCTION text")
+            elif (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                    and rel != _REGISTRAR
+                    and (n.func.attr == "register"
+                         and isinstance(n.func.value, ast.Attribute)
+                         and n.func.value.attr == "udf"
+                         or n.func.attr == "sql" and rel in _FAMILIES)):
+                stray.append(f"{rel}:{n.lineno} .{n.func.attr}() call")
+            elif (isinstance(n, ast.FunctionDef)
+                    and re.fullmatch(r"register_\w+_functions", n.name)):
+                stray.append(f"{rel}:{n.lineno} {n.name}")
+    assert not stray, "registration outside register_all:\n" + "\n".join(stray)
 
 
 def _composed(name: str):

@@ -152,6 +152,32 @@ def test_park_without_its_table_is_left_alone(engine, spark):
         _drop(spark, "wp_lost", "wp_lost__dml_old")
 
 
+# -- a rename onto a name in use -----------------------------------------
+
+@pytest.mark.parametrize("target", ["managed", "view"])
+def test_alter_rename_onto_existing_name_leaves_pre_image(engine, spark,
+                                                          target):
+    """`ALTER TABLE a ADD COLUMN x INT, RENAME TO b` with `b` present
+    fails before the rewrite: `a` reads as its exact pre-image, not
+    with the new column, and `b` is untouched."""
+    _drop(spark, "wp_ren_a", "wp_ren_b")
+    spark.table("region").write.saveAsTable("wp_ren_a")
+    if target == "managed":
+        spark.table("nation").write.saveAsTable("wp_ren_b")
+    else:
+        spark.table("nation").createOrReplaceTempView("wp_ren_b")
+    try:
+        pre_a, pre_b = _image(spark, "wp_ren_a"), _image(spark, "wp_ren_b")
+        with pytest.raises(Exception, match="wp_ren_b"):
+            engine.sql("ALTER TABLE wp_ren_a ADD COLUMN x INT, "
+                       "RENAME TO wp_ren_b")
+        assert _image(spark, "wp_ren_a") == pre_a
+        assert _image(spark, "wp_ren_b") == pre_b
+        assert _leftovers(spark, "wp_ren_a") == []
+    finally:
+        _drop(spark, "wp_ren_a", "wp_ren_b")
+
+
 # -- faults inside the shared replace -----------------------------------
 
 _STATEMENTS = {
