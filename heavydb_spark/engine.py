@@ -13,6 +13,7 @@ the session/catalog surface and the dialect delta — exactly this class.
 
 from __future__ import annotations
 
+import json
 import re
 import threading
 
@@ -22,12 +23,13 @@ from pyspark.sql import functions as F
 
 from heavydb_spark import catalog, dialect
 from heavydb_spark.dialect import _scan_balanced
-from heavydb_spark.functions import register_all
+from heavydb_spark.functions import FUNCTIONS, register_all
 from heavydb_spark.session import apply_runtime_conf, get_spark
 
 # DML statement shapes (DBHandler.cpp:6626 sql_execute_impl dispatches
 # UPDATE/DELETE off the main SELECT path; ParserWrapper.h:91). The engine
-# applies them as copy-on-write view replacement (operators/mutation.py).
+# computes the post-image (operators/mutation.py) and installs it through
+# Engine._replace.
 # EXPLAIN [OPTIMIZED | CALCITE [DETAIL] | PLAN] <query> — the
 # reference's explain family (Parser/ParserWrapper.h:34-46 ExplainType:
 # IR / OptimizedIR / Calcite / CalciteDetail / ExecutionPlan). The
@@ -186,7 +188,7 @@ _CREATE_WITH_RE = re.compile(
     # (id int) is a plain create, not name=CTAS_SOURCE with
     # WITH(id int) (found by the CtasUpdateTest comparator,
     # Ctas.SyntaxCheck:1302)
-    r"^\s*CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<table>\w+)"
+    r"^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(\w+)"
     r"\s*(.*?)\s*(?<![\w$])WITH\s*\((.*)\)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
@@ -196,8 +198,8 @@ _SHARD_KEY_RE = re.compile(r"^\s*SHARD\s+KEY\s*\(\s*(\w+)\s*\)\s*$", re.IGNORECA
 # definitions still carry HeavyDB type names (TEXT, TIME, INT[])
 _CREATE_PLAIN_RE = re.compile(
     r"^(?P<head>\s*CREATE\s+(?:TEMPORARY\s+)?TABLE\s+"
-    r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<table>[\w.]+)\s*\()"
-    r"(?P<defs>.*)(?P<tail>\)\s*;?\s*)$",
+    r"(?:IF\s+NOT\s+EXISTS\s+)?[\w.]+\s*\()"
+    r"(?P<defs>.*)\)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -230,6 +232,13 @@ _TF_ARG_RE = re.compile(r"^\s*(?:(\w+)\s*=>\s*)?(.+?)\s*$", re.DOTALL)
 _TF_NOARG_RE = re.compile(
     r"\bTABLE\s*\(\s*supported_ml_frameworks\s*\(\s*\)\s*\)", re.IGNORECASE
 )
+# the temp views the two expansions splice into a statement
+_TF_VIEW_RE = re.compile(r"\b__tf_(?:cursor|noarg)_[0-9a-f]{12}\b")
+# statements that keep their query's text under a new name (CREATE /
+# ALTER VIEW, CACHE TABLE ... AS): Spark resolves the temp views that
+# text names again at every read of that name
+_STORES_QUERY_TEXT_RE = re.compile(
+    r"(?:CREATE|ALTER)\b[\w\s]*?\bVIEW\b|CACHE\b", re.IGNORECASE)
 
 
 # HeavyDB query hints /*+ name[(arg)] [, ...] */ — QueryHint.h:65-94.
@@ -739,14 +748,13 @@ _ALTER_RENAME_COL_RE = re.compile(
 _ALTER_RENAME_TO_RE = re.compile(
     r"^RENAME\s+TO\s+([\w.]+)$", re.IGNORECASE
 )
+# the DEFAULT expression of an ADD column's constraint tail
+_ALTER_ADD_DEFAULT_RE = re.compile(
+    r".*?\bDEFAULT\s+(.+?)(?:\s+NOT\s+NULL)?\s*$", re.IGNORECASE | re.DOTALL
+)
 _ALTER_COL_TYPE_RE = re.compile(
     r"^ALTER\s+(?:COLUMN\s+)?([\w]+)\s+TYPE\s+(.+?)"
     r"(?:\s+NOT\s+NULL)?$",
-    re.IGNORECASE | re.DOTALL,
-)
-_COL_DEF_RE = re.compile(
-    r"^\s*([\w]+)\s+(.+?)(?:\s+NOT\s+NULL)?"
-    r"(?:\s+DEFAULT\s+(.+?))?(?:\s+NOT\s+NULL)?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -905,24 +913,11 @@ _INSERT_SELECT_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 
-# Every other CREATE TABLE form (CTAS, OR REPLACE, quoted names) and
-# DROP TABLE run natively; they are kinds of their own so the TIME
-# registry can follow the table (r12 advice)
-_CREATE_TABLE_RE = re.compile(
-    r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?TABLE\s+"
-    r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<table>[`\"\w.]+)",
-    re.IGNORECASE,
-)
-_DROP_TABLE_RE = re.compile(
-    r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?P<table>[`\"\w.]+)",
-    re.IGNORECASE,
-)
-
 # CREATE TEMPORARY TABLE t AS SELECT (Parser/ParserNode.h temporary
 # tables; CtasUpdateTest.cpp:1317): session-scoped materialized CTAS
 _CREATE_TEMP_CTAS_RE = re.compile(
-    r"^\s*CREATE\s+TEMPORARY\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<table>[\w.]+)\s+AS\s+(.*?);?\s*$",
+    r"^\s*CREATE\s+TEMPORARY\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
+    r"([\w.]+)\s+AS\s+(.*?);?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -974,17 +969,27 @@ def _split_cells_braced(s: str) -> list[str]:
     return parts
 
 
-def _rewrite_column_def(d: str) -> str:
-    """Apply _TYPE_REWRITES to the TYPE token of one column definition
-    only — never to the column name or to DEFAULT literals. A column
-    may legitimately be named `time` or `text`, and a DEFAULT string
+def _spark_type(declared: str) -> str:
+    """The Spark DDL type of a HeavyDB column type (_TYPE_REWRITES)."""
+    for pat, repl in _TYPE_REWRITES:
+        declared = pat.sub(repl, declared)
+    return declared.strip()
+
+
+def _rewrite_column_def(d: str) -> tuple[str, str, str, str]:
+    """(name, declared type, Spark type, tail) of one column
+    definition. The type rewrites apply to the TYPE token only — never
+    to the column name or to DEFAULT literals. A column may
+    legitimately be named `time` or `text`, and a DEFAULT string
     literal may contain type-name words; rewriting the raw def text
     corrupts both. The type region runs from after the name token to
     the first constraint keyword (DEFAULT/NOT NULL/...) that sits
-    outside string literals."""
+    outside string literals; the tail's DEFAULT literal is parsed
+    against the declared type (_coerce_default_literal). A definition
+    without a name token comes back whole as the name."""
     mname = _COLDEF_NAME_RE.match(d)
     if not mname:
-        return d
+        return d, "", "", ""
     name, rest = mname.group(1), mname.group(2)
     # find first constraint keyword outside single-quoted literals
     cut = len(rest)
@@ -992,19 +997,71 @@ def _rewrite_column_def(d: str) -> str:
         if rest.count("'", 0, mk.start()) % 2 == 0:
             cut = mk.start()
             break
-    type_part, tail = rest[:cut], rest[cut:]
-    is_time = bool(_TIME_TYPE_RE.search(type_part)) and "[" not in type_part
-    for pat, repl in _TYPE_REWRITES:
-        type_part = pat.sub(repl, type_part)
+    declared = rest[:cut].strip()
+    spark_type = _spark_type(declared)
     tail = _coerce_default_literal(
-        "TIME" if is_time else type_part.strip(), tail)
-    return f"{name} {type_part.strip()}" + (f" {tail.strip()}" if tail.strip() else "")
+        "TIME" if _time_kind(declared) == "TIME" else spark_type,
+        rest[cut:].strip())
+    return name, declared, spark_type, tail
 
 
+_TIME_TYPE_RE = re.compile(r"\bTIME\b(?!STAMP)", re.IGNORECASE)
+
+
+def _time_kind(declared: str) -> str | None:
+    """"TIME" for a declared TIME column, "TIME[]" for TIME[] / TIME[n]
+    (stored as INT and ARRAY<INT> of seconds-of-day: Spark has no TIME
+    type), None for any other type."""
+    if not _TIME_TYPE_RE.search(declared):
+        return None
+    return "TIME[]" if "[" in declared else "TIME"
+
+
+_TIME_KEYS = ("heavydb.TIME", "heavydb.TIME[]")
+
+
+def _time_properties(time_cols, time_array_cols) -> list[str]:
+    """TBLPROPERTIES items that record a table's TIME and TIME[]
+    columns in its catalog entry, where every Engine and every rename
+    finds them (HeavyDB keeps declared types in its catalog): keys
+    `heavydb.TIME` / `heavydb.TIME[]`, values the lowercased column
+    names, comma-separated. CREATE TABLE ... WITH lowercases its option
+    keys, so an option can never land on these upper-case keys."""
+    return [
+        f"'{key}' = '{','.join(sorted(cols))}'"
+        for key, cols in zip(_TIME_KEYS, (time_cols, time_array_cols))
+        if cols
+    ]
+
+
+def _create_table_sql(m: re.Match) -> str:
+    """Spark text of a plain CREATE TABLE (defs) statement."""
+    defs, time_props = _spark_column_defs(_split_top_level_defs(m["defs"]))
+    props = f" TBLPROPERTIES ({', '.join(time_props)})" if time_props else ""
+    return f"{m['head']}{defs}){props}"
+
+
+def _spark_column_defs(defs: list[str]) -> tuple[str, list[str]]:
+    """The Spark text of a column-definition list, and the
+    TBLPROPERTIES items that record its TIME and TIME[] columns."""
+    text = []
+    time = {"TIME": set(), "TIME[]": set()}
+    for d in defs:
+        name, declared, spark_type, tail = _rewrite_column_def(d)
+        text.append(" ".join(p for p in (name, spark_type, tail) if p))
+        kind = _time_kind(declared)
+        if kind:
+            time[kind].add(name.strip('`"').lower())
+    return ", ".join(text), _time_properties(time["TIME"], time["TIME[]"])
+
+
+# a DEFAULT clause, after an optional NOT NULL
 _DEFAULT_LIT_RE = re.compile(
-    r"^(\s*DEFAULT\s+)('(?:[^']|'')*')(.*)$", re.IGNORECASE | re.DOTALL)
+    r"^(\s*(?:NOT\s+NULL\s+)?DEFAULT\s+)('(?:[^']|'')*')(.*)$",
+    re.IGNORECASE | re.DOTALL)
 _DEFAULT_NUM_RE = re.compile(
-    r"^(\s*DEFAULT\s+)([-+]?\d+\.\d*(?:[eE][-+]?\d+)?)(\s.*|)$",
+    r"^(\s*(?:NOT\s+NULL\s+)?DEFAULT\s+)"
+    r"([-+]?\d+\.\d*(?:[eE][-+]?\d+)?)(\s.*|)$",
     re.IGNORECASE | re.DOTALL)
 
 
@@ -1113,32 +1170,6 @@ def _split_eq(part: str) -> tuple[str, str]:
         elif ch == "=" and not in_q:
             return part[:i], part[i + 1 :]
     raise ValueError(f"expected name = value, got {part!r}")
-
-
-_TIME_TYPE_RE = re.compile(r"\bTIME\b(?!STAMP)", re.IGNORECASE)
-
-
-def _time_cols_of_defs(defs: str, arrays: bool = False) -> frozenset:
-    """Lowercased names of TIME-typed columns in a pre-rewrite
-    column-definition list (TIME maps to INT in Spark — the TIME-ness
-    itself must be carried separately). `arrays=False` returns the
-    scalar TIME columns, `arrays=True` the TIME[] / TIME[n] array
-    columns (stored as ARRAY<INT> of seconds-of-day)."""
-    out = set()
-    for d in _split_top_level_defs(defs):
-        mname = _COLDEF_NAME_RE.match(d)
-        if not mname:
-            continue
-        name, rest = mname.group(1), mname.group(2)
-        cut = len(rest)
-        for mk in _COLDEF_TAIL_RE.finditer(rest):
-            if rest.count("'", 0, mk.start()) % 2 == 0:
-                cut = mk.start()
-                break
-        tp = rest[:cut]
-        if _TIME_TYPE_RE.search(tp) and ("[" in tp) == arrays:
-            out.add(name.strip('`"').lower())
-    return frozenset(out)
 
 
 def _fold_time_array_cell(cell: str) -> str | None:
@@ -1253,13 +1284,6 @@ class Engine:
         # names created via CREATE FOREIGN TABLE — DROP FOREIGN TABLE
         # only ever drops these (never an attached fixture view)
         self._foreign_tables: set[str] = set()
-        # TIME-typed columns per table (lowercased): TIME stores as a
-        # seconds-of-day integer (Spark has no TIME type), so the
-        # declared TIME-ness must be remembered for the write-path
-        # coercions (INSERT/UPDATE/load_table string cells parse via
-        # the kTIME chain) and SHOW CREATE TABLE round-trips.
-        self._time_columns: dict[str, frozenset] = {}
-        self._time_array_columns: dict[str, frozenset] = {}
         # Result-set recycling (ResultSetRecyclerHolder.cpp,
         # QueryPlanDagCache.cpp): opt-in via ALTER SESSION SET
         # RESULT_CACHE='on' or `engine.result_cache = True`. Keyed by
@@ -1371,12 +1395,13 @@ class Engine:
 
         Managed tables append in place; attached temp views union
         copy-on-write. Returns a (table_name, rows_loaded) row."""
-        target = self.spark.table(name)
-        cols = list(column_names) if column_names else list(target.columns)
-        unknown = [c for c in cols if c not in target.columns]
+        fields, tcols, _ = self._write_target(name)
+        by_name = {f.name: f for f in fields}
+        cols = list(column_names) if column_names else list(by_name)
+        unknown = [c for c in cols if c not in by_name]
         if unknown:
             raise ValueError(f"unknown column(s) {unknown} in {name}")
-        sub_schema = [target.schema[c] for c in cols]
+        sub_schema = [by_name[c] for c in cols]
         try:
             import pyarrow as pa
 
@@ -1401,15 +1426,13 @@ class Engine:
             # semantics (r12 advice).
             if not _rows_have_strings(rows):
                 raise
-            loaded = self._load_table_string_rows(
-                rows, sub_schema, self._time_cols(name))
-        for c in target.columns:
-            if c not in cols:
+            loaded = self._load_table_string_rows(rows, sub_schema, tcols)
+        for f in fields:
+            if f.name not in cols:
                 loaded = loaded.withColumn(
-                    c, F.lit(None).cast(target.schema[c].dataType)
-                )
+                    f.name, F.lit(None).cast(f.dataType))
         # checkpoint: count + append run off ONE execution of the load
-        loaded = loaded.select(*target.columns).localCheckpoint(eager=True)
+        loaded = loaded.select(*by_name).localCheckpoint(eager=True)
         n = loaded.count()
         self._append(name, loaded)
         return self.spark.createDataFrame(
@@ -1436,18 +1459,8 @@ class Engine:
         and return a one-row `rows_affected` DataFrame.
         """
         kind, m, read_only = _classify(query)
-        # CREATE IF NOT EXISTS over a pre-existing table no-ops — the
-        # live registry entry (if any) must survive, so existence is
-        # captured BEFORE execution (r12 advice: registry lifecycle)
-        skip_sync = False
-        if kind in _CREATE_TABLE_KINDS and m["ine"]:
-            try:
-                skip_sync = self.spark.catalog.tableExists(
-                    m["table"].strip('`"'))
-            except Exception:
-                skip_sync = False
         try:
-            out = self._sql_impl(query, kind, m, read_only)
+            return self._sql_impl(query, kind, m, read_only)
         finally:
             if not read_only:
                 # after the statement, not before: a read that built
@@ -1455,60 +1468,51 @@ class Engine:
                 # and is not cached (result-set recycling invalidates
                 # per table epoch in the reference; wholesale here)
                 self._invalidate_result_cache()
-        if not skip_sync:
-            self._time_registry_sync(kind, m)
-        return out
-
-    def _time_registry_sync(self, kind: str, m: re.Match | None) -> None:
-        """Post-success maintenance of the declared-TIME column
-        registry (r12 advice: the registry was only ever written when
-        a CREATE had TIME columns and never invalidated, so DROP +
-        re-CREATE of the same name inherited stale TIME parsing).
-        Every successful CREATE TABLE (re)assigns its entry — an EMPTY
-        frozenset when no TIME columns, including CTAS forms — and
-        DROP TABLE clears it.  RENAME TO / column rename / drop /
-        retype / ADD COLUMN move entries inside _alter_table, which
-        has the resolved names.  Runs only after _sql_impl returned,
-        so a failed statement never mutates the registry."""
-        if kind == "drop_table":
-            key = self._time_key(m["table"])
-            self._time_columns.pop(key, None)
-            self._time_array_columns.pop(key, None)
-            return
-        if kind not in _CREATE_TABLE_KINDS:
-            return
-        key = self._time_key(m["table"])
-        defs = m["defs"] if kind == "create_table" else None
-        if kind == "create_with":
-            body = m.group(3).strip()
-            if body.startswith("(") and body.endswith(")"):
-                defs = body[1:-1]
-        self._time_columns[key] = (
-            _time_cols_of_defs(defs) if defs else frozenset())
-        self._time_array_columns[key] = (
-            _time_cols_of_defs(defs, arrays=True) if defs else frozenset())
 
     def _sql_impl(self, query: str, kind: str, m: re.Match | None,
                   read_only: bool) -> DataFrame:
-        handler = _KINDS[kind][1] if m else None
         if kind in _BEFORE_TABLE_FUNCTIONS:
-            return handler(self, m)
-        unexpanded = query
-        query = self._expand_cursor_table_functions(query)
-        while (mt := _TF_NOARG_RE.search(query)) is not None:
-            import uuid
+            return _KINDS[kind][1](self, m)
+        expanded = query
+        try:
+            expanded = self._expand_cursor_table_functions(query)
+            while (mt := _TF_NOARG_RE.search(expanded)) is not None:
+                import uuid
 
-            from heavydb_spark.operators.ml import supported_ml_frameworks
+                from heavydb_spark.operators.ml import supported_ml_frameworks
 
-            view = f"__tf_noarg_{uuid.uuid4().hex[:12]}"
-            supported_ml_frameworks(self.spark).createOrReplaceTempView(view)
-            query = query[: mt.start()] + view + query[mt.end() :]
-        if m is not None and query is not unexpanded:
-            # the expansion spliced view names into the statement: the
-            # kind stays, its groups bind to the text that runs
-            m = m.re.match(query[_code_start(query):])
-        if handler is not None and m is not None:
-            res = handler(self, m)
+                view = f"__tf_noarg_{uuid.uuid4().hex[:12]}"
+                supported_ml_frameworks(self.spark).createOrReplaceTempView(
+                    view)
+                expanded = (expanded[: mt.start()] + view
+                            + expanded[mt.end() :])
+            if m is not None and expanded is not query:
+                # the expansion spliced view names into the statement:
+                # the kind stays, its groups bind to the text that runs
+                m = m.re.match(expanded[_code_start(expanded):])
+            return self._run_statement(expanded, kind, m, read_only)
+        finally:
+            # the statement is analysed (a command has run) and its
+            # frame holds the views' plans, so their names can go —
+            # unless the statement stored its text under a new name,
+            # which Spark resolves again at every read
+            if expanded is not query and not _STORES_QUERY_TEXT_RE.match(
+                    expanded, _code_start(expanded)):
+                self._drop_spliced_views(expanded, query)
+
+    def _drop_spliced_views(self, expanded: str, original: str) -> None:
+        """Drop the table-function views that expanding `original`
+        into `expanded` registered."""
+        for view in (set(_TF_VIEW_RE.findall(expanded))
+                     - set(_TF_VIEW_RE.findall(original))):
+            self.spark.catalog.dropTempView(view)
+
+    def _run_statement(self, query: str, kind: str, m: re.Match | None,
+                       read_only: bool) -> DataFrame:
+        """Run a statement whose table functions have expanded: its
+        kind's handler, then the dialect rewrite and `spark.sql`."""
+        if m is not None:
+            res = _KINDS[kind][1](self, m)
             if isinstance(res, str):
                 query = res
             elif res is not None:
@@ -1749,11 +1753,8 @@ class Engine:
                 "header", topts.get("header", "true")
             ).option("inferSchema", "true")
         if cols:
-            defs = ", ".join(
-                _rewrite_column_def(d)
-                for d in _split_top_level_defs(cols)
-            )
-            reader = reader.schema(defs)
+            reader = reader.schema(
+                _spark_column_defs(_split_top_level_defs(cols))[0])
             if wrapper == "delimited_file":
                 reader = reader.option("inferSchema", "false")
         df = reader.load(path)
@@ -1950,30 +1951,46 @@ class Engine:
             [(old, new)], "old_name STRING, new_name STRING"
         )
 
-    def _time_key(self, table: str) -> str:
-        """Registry key for the declared-TIME column map: the
-        database-qualified lowercased table name (r12 advice — a bare
-        name collides across databases; unqualified names resolve
-        against the CURRENT database at both write and lookup, which
-        is exactly how Spark resolves the table itself)."""
-        t = table.strip().strip('`"').lower()
-        if "." not in t:
-            try:
-                db = self.spark.catalog.currentDatabase().lower()
-            except Exception:
-                db = "default"
-            t = f"{db}.{t}"
-        return t
+    def _write_target(self, name: str):
+        """(fields, TIME columns, TIME[] columns) of a table or view,
+        from its session-catalog entry in one lookup: the fields of its
+        Spark schema and the lowercased column names its heavydb.TIME /
+        heavydb.TIME[] properties record (_time_properties; a temp view
+        has none). Raises when `name` resolves to nothing."""
+        from pyspark.sql.types import StructType
+
+        state = self.spark._jsparkSession.sessionState()
+        meta = state.catalog().getTempViewOrPermanentTableMetadata(
+            state.sqlParser().parseTableIdentifier(name))
+        props = meta.properties()
+
+        def cols(key: str) -> frozenset:
+            v = props.get(key)
+            return frozenset(v.get().split(",")) if v.isDefined() \
+                else frozenset()
+
+        schema = StructType.fromJson(json.loads(meta.schema().json()))
+        return schema.fields, *(cols(k) for k in _TIME_KEYS)
 
     def _time_cols(self, table: str) -> frozenset:
-        """Declared-TIME columns (lowercased) of a table created
-        through the engine this session; empty when unknown."""
-        return self._time_columns.get(self._time_key(table), frozenset())
+        """Declared TIME columns (lowercased) of a table."""
+        return self._write_target(table)[1]
 
-    def _time_array_cols(self, table: str) -> frozenset:
-        """Declared TIME[] array columns (lowercased)."""
-        return self._time_array_columns.get(
-            self._time_key(table), frozenset())
+    def _insert_columns(self, name: str, collist: str | None):
+        """(names, types, TIME columns, TIME[] columns) of the columns
+        an INSERT into `name` fills — its column list, else every
+        column, names lowercased — or None when the table or a listed
+        column does not resolve."""
+        try:
+            fields, tcols, tacols = self._write_target(name)
+        except Exception:
+            return None
+        by_name = {f.name.lower(): f.dataType for f in fields}
+        names = ([c.strip().strip('`"').lower() for c in collist.split(",")]
+                 if collist else list(by_name))
+        if any(n not in by_name for n in names):
+            return None
+        return names, [by_name[n] for n in names], tcols, tacols
 
     def _coerce_insert_select(self, m: re.Match) -> str | None:
         """INSERT INTO t [cols] SELECT/WITH ... — coerce the source
@@ -1991,22 +2008,10 @@ class Engine:
         unknown table, column-count mismatch, duplicate or non-
         identifier source column names, or no type difference."""
         name, collist, body = m.group(1), m.group(2), m.group(3)
-        try:
-            sch = self.spark.table(name).schema
-        except Exception:
+        target = self._insert_columns(name, collist)
+        if target is None:
             return None
-        by_name = {f.name.lower(): f.dataType for f in sch.fields}
-        if collist:
-            tnames = [c.strip().strip('`"').lower()
-                      for c in collist.split(",")]
-            try:
-                types = [by_name[c] for c in tnames]
-            except KeyError:
-                return None
-        else:
-            tnames = [f.name.lower() for f in sch.fields]
-            types = [f.dataType for f in sch.fields]
-        tcols = self._time_cols(name)
+        tnames, types, tcols, _ = target
         try:
             inner = self.sql(body)  # dialect path; analysis only
         except Exception:
@@ -2064,23 +2069,10 @@ class Engine:
         when the target schema or the row shape can't be resolved —
         Spark then reports its own analysis error."""
         name, collist, body = m.group(1), m.group(2), m.group(3)
-        try:
-            sch = self.spark.table(name).schema
-        except Exception:
+        target = self._insert_columns(name, collist)
+        if target is None:
             return None
-        by_name = {f.name.lower(): f.dataType for f in sch.fields}
-        if collist:
-            names = [c.strip().strip('`"').lower()
-                     for c in collist.split(",")]
-            try:
-                types = [by_name[c] for c in names]
-            except KeyError:
-                return None
-        else:
-            names = [f.name.lower() for f in sch.fields]
-            types = [f.dataType for f in sch.fields]
-        tcols = self._time_cols(name)
-        tacols = self._time_array_cols(name)
+        names, types, tcols, tacols = target
 
         def _cell(c: str, t, is_time: bool, is_time_arr: bool = False) -> str:
             if c.upper() == "DEFAULT":
@@ -2456,15 +2448,18 @@ class Engine:
         return self.spark.createDataFrame(
             [(name, "created")], "table_name STRING, status STRING")
 
-    def _replace(self, table: str, image: DataFrame, stage: str) -> None:
+    def _replace(self, table: str, image: DataFrame, stage: str,
+                 time_cols: tuple | None = None) -> None:
         """Install `image` as the contents of `table`; every rewrite
         (UPDATE, DELETE, ALTER's column actions, OPTIMIZE, TRUNCATE of
         a view) goes through here. A temp view is replaced: the
         image's plan binds to the view's underlying scan, not to its
         name, so this is not self-referential. A managed table is
         written to `{table}__{stage}_staging` with its CLUSTERED BY
-        layout and swapped in by rename, so native INSERTs and
-        DESCRIBEs keep seeing a real table, never a shadowing view."""
+        layout and its (TIME, TIME[]) columns — `time_cols`, by default
+        the table's own — and swapped in by rename, so native INSERTs
+        and DESCRIBEs keep seeing a real table, never a shadowing
+        view, and no failure after the swap can shed a TIME column."""
         try:
             if self._is_temp_view(table):
                 image.createOrReplaceTempView(table)
@@ -2479,6 +2474,11 @@ class Engine:
                     *bucket_cols
                 )
             writer.saveAsTable(staging)
+            if time_cols is None:
+                time_cols = self._write_target(table)[1:]
+            if props := _time_properties(*time_cols):
+                self.spark.sql(f"ALTER TABLE {staging} SET TBLPROPERTIES "
+                               f"({', '.join(props)})")
             self._swap_tables(staging, table, f"{table}__{stage}_old")
         finally:
             self._invalidate_result_cache()
@@ -2541,9 +2541,10 @@ class Engine:
         every step: the original parks under `park` (never dropped
         first), so a failure between statements leaves both copies
         findable by name; on rename failure the original is restored.
-        User-visible metadata (table comment, heavydb.* TBLPROPERTIES,
-        column comments) carries over from the original — a rewrite
-        must not silently shed it."""
+        User-visible metadata (table comment, heavydb.* TBLPROPERTIES
+        but the TIME ones, which _replace sets on `staging`, column
+        comments) carries over from the original — a rewrite must not
+        silently shed it."""
         # `target` exists (the caller just read it), so a table or
         # directory already under `park` is the pre-image of a swap
         # that completed but whose final DROP failed or was killed
@@ -2574,7 +2575,8 @@ class Engine:
             keep = {
                 k: v
                 for k, v in props.items()
-                if k == "comment" or k.startswith("heavydb.")
+                if k == "comment" or (k.startswith("heavydb.")
+                                      and k not in _TIME_KEYS)
             }
             if keep:
                 kv = ", ".join(
@@ -2654,79 +2656,88 @@ class Engine:
 
     def _expand_cursor_table_functions(self, sql: str) -> str:
         """Replace every `TABLE(tf(CURSOR(sub), args...))` with a temp
-        view holding the executed table function's output. The view
-        must outlive this call (the returned DataFrame is lazy and may
-        be collected much later), so views persist for the session
-        under collision-free uuid names.
+        view holding the executed table function's output, under a
+        collision-free uuid name. Engine.sql drops the views once the
+        statement has run; if an expansion fails, the views already
+        registered for the statement are dropped here.
 
         Matching and paren-scanning run on a literal-masked copy
         (same length, so indexes map onto the raw text): a string
         literal containing `TABLE(f(CURSOR(` must never trigger
         expansion. CURSOR bodies must be read-only queries — the
         reference's CURSOR grammar takes a query, never DML."""
-        while True:
-            masked = _mask_literals_same_len(sql)
-            m = _TF_CURSOR_RE.search(masked)
-            if not m:
-                return sql
-            tf_name = m.group(1).lower()
-            cursor_end = _scan_balanced(masked, m.end())
-            subquery = sql[m.end() : cursor_end - 1]
-            if not self._is_read_only_statement(subquery):
-                raise ValueError(
-                    "CURSOR(...) takes a read-only query "
-                    "(SELECT/WITH/VALUES), not DML/DDL"
-                )
-            # we are now inside the tf call at depth 1: scanning on
-            # consumes the remaining args and the tf's closing paren
-            tf_end = _scan_balanced(masked, cursor_end)
-            rest = sql[cursor_end : tf_end - 1].lstrip()
-            if rest.startswith(","):
-                rest = rest[1:]
-            args: dict[str, object] = {}
-            pos = 0  # positional index counts ONLY unnamed args — a
-            # named arg earlier in the list must not shift the
-            # positions of later positional ones
-            for part in (
-                p for p in _split_top_level_defs(rest) if p.strip()
-            ):
-                am = _TF_ARG_RE.match(part)
-                if am.group(1):
-                    key = am.group(1).lower()
-                else:
-                    key = str(pos)
-                    pos += 1
-                val = am.group(2).strip()
-                cm = re.match(r"^CURSOR\s*\((.*)\)\s*$", val, re.I | re.S)
-                if cm:
-                    # secondary cursor argument (e.g. the query vector
-                    # of tf_feature_similarity) -> executed DataFrame;
-                    # same read-only contract as the primary cursor
-                    if not self._is_read_only_statement(cm.group(1)):
-                        raise ValueError(
-                            "CURSOR(...) takes a read-only query "
-                            "(SELECT/WITH/VALUES), not DML/DDL"
-                        )
-                    args[key] = self.sql(cm.group(1))
-                else:
-                    args[key] = val.strip("'\"")
-            table_end = masked.index(")", tf_end)
-            builder = _SQL_TABLE_FUNCTIONS.get(tf_name)
-            if builder is None:
-                raise ValueError(
-                    f"unknown table function {tf_name!r}; CURSOR-form SQL "
-                    f"supports {sorted(_SQL_TABLE_FUNCTIONS)}"
-                )
-            cur_df = self.sql(subquery)
-            out = builder(cur_df, args)
-            # uuid view name: concurrent Engine.sql calls (the pattern
-            # tests/test_concurrency.py supports) must never collide on
-            # a shared counter's view name
-            import uuid
+        out = sql
+        try:
+            while m := _TF_CURSOR_RE.search(
+                    masked := _mask_literals_same_len(out)):
+                out = self._expand_cursor_call(out, masked, m)
+            return out
+        except BaseException:
+            self._drop_spliced_views(out, sql)
+            raise
 
-            view = f"__tf_cursor_{uuid.uuid4().hex[:12]}"
-            out.createOrReplaceTempView(view)
-            sql = sql[: m.start()] + view + sql[table_end + 1 :]
+    def _expand_cursor_call(self, sql: str, masked: str,
+                            m: re.Match) -> str:
+        """`sql` with the table-function call `m` found in `masked`
+        replaced by a temp view of its output."""
+        tf_name = m.group(1).lower()
+        cursor_end = _scan_balanced(masked, m.end())
+        subquery = sql[m.end() : cursor_end - 1]
+        if not self._is_read_only_statement(subquery):
+            raise ValueError(
+                "CURSOR(...) takes a read-only query "
+                "(SELECT/WITH/VALUES), not DML/DDL"
+            )
+        # we are now inside the tf call at depth 1: scanning on
+        # consumes the remaining args and the tf's closing paren
+        tf_end = _scan_balanced(masked, cursor_end)
+        rest = sql[cursor_end : tf_end - 1].lstrip()
+        if rest.startswith(","):
+            rest = rest[1:]
+        args: dict[str, object] = {}
+        pos = 0  # positional index counts ONLY unnamed args — a
+        # named arg earlier in the list must not shift the
+        # positions of later positional ones
+        for part in (
+            p for p in _split_top_level_defs(rest) if p.strip()
+        ):
+            am = _TF_ARG_RE.match(part)
+            if am.group(1):
+                key = am.group(1).lower()
+            else:
+                key = str(pos)
+                pos += 1
+            val = am.group(2).strip()
+            cm = re.match(r"^CURSOR\s*\((.*)\)\s*$", val, re.I | re.S)
+            if cm:
+                # secondary cursor argument (e.g. the query vector
+                # of tf_feature_similarity) -> executed DataFrame;
+                # same read-only contract as the primary cursor
+                if not self._is_read_only_statement(cm.group(1)):
+                    raise ValueError(
+                        "CURSOR(...) takes a read-only query "
+                        "(SELECT/WITH/VALUES), not DML/DDL"
+                    )
+                args[key] = self.sql(cm.group(1))
+            else:
+                args[key] = val.strip("'\"")
+        table_end = masked.index(")", tf_end)
+        builder = _SQL_TABLE_FUNCTIONS.get(tf_name)
+        if builder is None:
+            raise ValueError(
+                f"unknown table function {tf_name!r}; CURSOR-form SQL "
+                f"supports {sorted(_SQL_TABLE_FUNCTIONS)}"
+            )
+        cur_df = self.sql(subquery)
+        out = builder(cur_df, args)
+        # uuid view name: concurrent Engine.sql calls (the pattern
+        # tests/test_concurrency.py supports) must never collide on
+        # a shared counter's view name
+        import uuid
+
+        view = f"__tf_cursor_{uuid.uuid4().hex[:12]}"
+        out.createOrReplaceTempView(view)
+        return sql[: m.start()] + view + sql[table_end + 1 :]
 
     def _show_create_table(self, name: str) -> DataFrame:
         """SHOW CREATE TABLE t — the reference emits one row with the
@@ -2734,14 +2745,14 @@ class Engine:
         (ShowCommandsDdlTest.cpp:1446). Synthesized from the catalog
         schema with Spark types mapped back to HeavyDB names; works for
         temp views (Spark's native command rejects those)."""
-        schema = self.spark.table(name).schema
-        tcols = self._time_cols(name)
+        fields, tcols, tacols = self._write_target(name)
         cols = ",\n  ".join(
             f"{f.name} "
             + ("TIME" if f.name.lower() in tcols
+               else "TIME[]" if f.name.lower() in tacols
                else _heavy_type(f.dataType.simpleString()))
             + ("" if f.nullable else " NOT NULL")
-            for f in schema.fields
+            for f in fields
         )
         stmt = f"CREATE TABLE {name} (\n  {cols});"
         return self.spark.createDataFrame(
@@ -2812,6 +2823,7 @@ class Engine:
         shard_key: str | None = None
         body = body.strip()
         cols_clause = ctas_select = None
+        time_props: list[str] = []
         if body.startswith("("):
             kept = []
             for d in _split_top_level_defs(body[1:-1]):
@@ -2819,10 +2831,9 @@ class Engine:
                 if mk:
                     shard_key = mk.group(1)
                     continue
-                kept.append(_rewrite_column_def(d).strip())
-            cols_clause = "(" + ", ".join(kept) + ")"
-            # TIME registry assignment happens post-success in
-            # _time_registry_sync
+                kept.append(d)
+            cols_clause, time_props = _spark_column_defs(kept)
+            cols_clause = f"({cols_clause})"
         elif body.upper().startswith("AS"):
             sel = body[2:].strip()
             if sel.startswith("(") and sel.endswith(")"):
@@ -2852,11 +2863,9 @@ class Engine:
             stmt.append(
                 f"CLUSTERED BY ({shard_key}) INTO {int(shard_count)} BUCKETS"
             )
-        if opts:
-            props = ", ".join(
-                f"'heavydb.{k}' = '{v}'" for k, v in sorted(opts.items())
-            )
-            stmt.append(f"TBLPROPERTIES ({props})")
+        props = [f"'heavydb.{k}' = '{v}'" for k, v in sorted(opts.items())]
+        if props + time_props:
+            stmt.append(f"TBLPROPERTIES ({', '.join(props + time_props)})")
         if ctas_select:
             stmt.append(f"AS {ctas_select}")
         return self.spark.sql(" ".join(stmt))
@@ -2865,6 +2874,7 @@ class Engine:
         from heavydb_spark.operators.mutation import update_projection
 
         df = self.spark.table(table)
+        fields, tcols, _ = self._write_target(table)
         # Coerce every assignment to the target column's type, exactly
         # as the reference writeback casts each update value to the
         # column's SQLTypeInfo (StorageIOFacility.h:105) — instead of
@@ -2877,7 +2887,7 @@ class Engine:
         # through the reference rounding rules; everything else takes
         # the plain cast in update_projection.
         col_types = {f.name.lower(): f.dataType.simpleString()
-                     for f in df.schema.fields}
+                     for f in fields}
         int_targets = ("tinyint", "smallint", "int", "bigint")
         raw = _split_assignments(set_clause)
         tof = self._type_resolver(
@@ -2890,7 +2900,6 @@ class Engine:
         # scalar subquery cannot sit inside the chains' higher-order
         # binding), then the coercion expression reads the staged
         # column; temps drop from the final projection.
-        tcols = self._time_cols(table)
         work = df
         assignments: dict[str, Column] = {}
         for i, (k, v) in enumerate(raw.items()):
@@ -2954,12 +2963,6 @@ class Engine:
         self._replace(table, delete_filter(df, cond), "dml")
         return self.spark.range(1).select(F.lit(affected).alias("rows_affected"))
 
-    def _spark_type_text(self, heavy_type: str) -> str:
-        t = heavy_type.strip()
-        for pat, repl in _TYPE_REWRITES:
-            t = pat.sub(repl, t)
-        return t.strip()
-
     def _alter_table(self, table: str, actions: str) -> DataFrame:
         """ALTER TABLE t ADD/DROP/RENAME COLUMN / ALTER COLUMN TYPE /
         RENAME TO (AlterTableDdlTest.cpp; HeavyDB also spells rename as
@@ -2987,10 +2990,16 @@ class Engine:
         except Exception as exc:
             raise ValueError(f"ALTER TABLE target {table} not found") from exc
         new_name: str | None = None
-        # declared-TIME registry mutations collect here and apply only
-        # after the rewrite succeeds (r12 advice: renames/drops/retypes
-        # silently lost or leaked TIME coercion)
-        registry_ops: list[tuple] = []
+        # declared TIME / TIME[] columns (lowercased name -> kind), as
+        # the actions leave them
+        _, tcols, tacols = self._write_target(table)
+        time = {c: "TIME" for c in tcols} | {c: "TIME[]" for c in tacols}
+
+        def _set_time(col: str, kind: str | None) -> None:
+            if kind:
+                time[col.lower()] = kind
+            else:
+                time.pop(col.lower(), None)
 
         def _resolve(col: str) -> str | None:
             # Spark resolves column names case-insensitively by
@@ -3012,8 +3021,7 @@ class Engine:
                 if _resolve(new) is not None:
                     raise ValueError(f"column {new} already exists")
                 df = df.withColumnRenamed(old, new)
-                registry_ops.append(
-                    ("rencol", old.lower(), new.strip('`"').lower()))
+                _set_time(new, time.pop(old.lower(), None))
                 continue
             m = _ALTER_RENAME_TO_RE.match(action)
             if m:
@@ -3022,18 +3030,13 @@ class Engine:
             m = _ALTER_COL_TYPE_RE.match(action)
             if m:
                 col = _resolve(m.group(1))
-                new_type = self._spark_type_text(m.group(2))
                 if col is None:
                     raise ValueError(
                         f"column {m.group(1)} does not exist"
                     )
-                df = df.withColumn(col, F.col(col).cast(new_type))
-                _rt_time = bool(_TIME_TYPE_RE.search(m.group(2)))
-                registry_ops.append((
-                    "retype", col.lower(),
-                    _rt_time and "[" not in m.group(2),
-                    _rt_time and "[" in m.group(2),
-                ))
+                df = df.withColumn(
+                    col, F.col(col).cast(_spark_type(m.group(2))))
+                _set_time(col, _time_kind(m.group(2)))
                 continue
             m = _ALTER_DROP_RE.match(action)
             if m:
@@ -3045,7 +3048,7 @@ class Engine:
                 if len(df.columns) == 1:
                     raise ValueError("cannot drop the only column")
                 df = df.drop(col)
-                registry_ops.append(("dropcol", col.lower()))
+                _set_time(col, None)
                 continue
             m = _ALTER_ADD_RE.match(action)
             if m:
@@ -3053,41 +3056,29 @@ class Engine:
                 if defs.startswith("(") and defs.endswith(")"):
                     defs = defs[1:-1]
                 for d in _split_top_level_defs(defs):
-                    dm = _COL_DEF_RE.match(d)
-                    if not dm:
+                    name, declared, styp, tail = _rewrite_column_def(d)
+                    if not declared:
                         raise ValueError(f"bad column definition: {d!r}")
-                    col, typ, dflt = dm.group(1), dm.group(2), dm.group(3)
+                    col = name.strip('`"')
                     if _resolve(col) is not None:
                         raise ValueError(f"column {col} already exists")
-                    # TIME is detected in the RAW declared type —
-                    # _spark_type_text maps it to INT, so the DEFAULT
-                    # must parse through the kTIME chain and the
-                    # column must join the session TIME registry or
-                    # later string writes skip the seconds-of-day
-                    # parse CREATE TABLE columns get (r12 advice)
-                    has_time = bool(_TIME_TYPE_RE.search(typ))
-                    is_time = has_time and "[" not in typ
-                    is_time_arr = has_time and "[" in typ
-                    styp = self._spark_type_text(typ)
-                    if dflt is not None:
-                        # string defaults on typed columns parse with
-                        # importer semantics, like CREATE TABLE
-                        # defaults (_coerce_default_literal)
-                        coerced = _coerce_default_literal(
-                            "TIME" if is_time else styp,
-                            f"DEFAULT {dflt}")
-                        base = F.expr(dialect.rewrite(
-                            coerced[len("DEFAULT "):]))
-                    else:
-                        base = F.lit(None)
+                    # a string DEFAULT is already parsed against the
+                    # declared type, TIME included, like CREATE TABLE
+                    # defaults (_coerce_default_literal)
+                    dm = _ALTER_ADD_DEFAULT_RE.match(tail)
+                    base = (F.expr(dialect.rewrite(dm.group(1))) if dm
+                            else F.lit(None))
                     df = df.withColumn(col, base.cast(styp))
-                    registry_ops.append(
-                        ("addcol", col.strip('`"').lower(), is_time,
-                         is_time_arr))
+                    _set_time(col, _time_kind(declared))
                 continue
             raise AssertionError(f"unreachable: {action!r}")  # pre-scanned
 
         target = new_name or table
+        if time and self._is_temp_view(table):
+            raise ValueError(
+                f"ALTER TABLE {table}: a temporary view cannot hold TIME "
+                f"columns ({', '.join(sorted(time))}); it has no catalog "
+                "entry to record them in")
         # a rename onto a name in use fails before the rewrite, so the
         # failed statement leaves the table as it was
         if new_name and (self._is_temp_view(new_name)
@@ -3096,26 +3087,13 @@ class Engine:
                 f"ALTER TABLE {table}: RENAME TO target {new_name} "
                 "already exists")
         if _projection_changed(parsed):
-            self._replace(table, df, "alter")
+            self._replace(table, df, "alter", tuple(
+                frozenset(c for c, k in time.items() if k == kind)
+                for kind in ("TIME", "TIME[]")))
         if new_name:
-            # metadata-only for a managed table and for a temp view alike
+            # metadata-only for a managed table and for a temp view
+            # alike; a table's properties, TIME ones included, move
             self.spark.sql(f"ALTER TABLE {table} RENAME TO {new_name}")
-        # apply the TIME-registry mutations only now that the rewrite
-        # (and any RENAME TO) committed; the pop+reassign also MOVES
-        # the entries when the table was renamed
-        key_old, key_new = self._time_key(table), self._time_key(target)
-        for reg, flag_idx in ((self._time_columns, 2),
-                              (self._time_array_columns, 3)):
-            tset = set(reg.pop(key_old, frozenset()))
-            for op in registry_ops:
-                if op[0] == "rencol" and op[1] in tset:
-                    tset.discard(op[1])
-                    tset.add(op[2])
-                elif op[0] == "dropcol":
-                    tset.discard(op[1])
-                elif op[0] in ("retype", "addcol"):
-                    (tset.add if op[flag_idx] else tset.discard)(op[1])
-            reg[key_new] = frozenset(tset)
         return self.spark.createDataFrame(
             [(target, "altered")], "table_name STRING, status STRING"
         )
@@ -3395,11 +3373,7 @@ class Engine:
         from heavydb_spark.sources import copy_io
 
         name, coldefs, path, options = m[1], m[2], m[3], m[4] or ""
-        defs = [
-            _rewrite_column_def(d)
-            for d in _split_top_level_defs(coldefs)
-        ]
-        schema = ", ".join(defs)
+        schema = _spark_column_defs(_split_top_level_defs(coldefs))[0]
         opts = {}
         if options.strip():
             for k, v in _split_assignments(options).items():
@@ -3626,20 +3600,16 @@ class Engine:
 
     def _show_functions(self, details: str | None) -> DataFrame:
         """SHOW [RUNTIME] FUNCTIONS [DETAILS f, ...]
-        (DdlCommandExecutor.cpp:1957): the engine's registered scalar
-        SQL functions (ST_ surface, string/sketch pandas UDFs, dialect
-        kernels). CPU true / GPU false — Spark executors are the only
-        device class here."""
-        fns = sorted(
-            r[0].split(".")[-1].lower()
-            for r in self.spark.sql("SHOW USER FUNCTIONS").collect()
-        )
+        (DdlCommandExecutor.cpp:1957): the scalar SQL functions the
+        engine registers — the declaration table `functions.FUNCTIONS`
+        (ST_ surface, string/sketch pandas UDFs, dialect kernels), the
+        names that shadow a Spark builtin included. CPU true / GPU
+        false — Spark executors are the only device class here."""
+        fns = sorted(FUNCTIONS)
         if not details:
             return self.spark.createDataFrame(
                 [(n,) for n in fns], "name STRING"
             )
-        from heavydb_spark.functions import FUNCTIONS
-
         sig_re = re.compile(
             r"FUNCTION\s+\w+\s*\((.*?)\)\s*RETURNS\s+([\w<>:,.\s]+?)\s+RETURN",
             re.IGNORECASE | re.DOTALL,
@@ -3906,13 +3876,12 @@ class Engine:
 
 # -- statement classification ---------------------------------------------
 # HeavyDB classifies a statement once (Parser/ParserWrapper.h:91); so does
-# _classify, and Engine.sql, the result cache, the TIME registry and
-# sql_validate all read its (kind, match, read_only).
+# _classify, and Engine.sql, the result cache and sql_validate all read its
+# (kind, match, read_only).
 #
 # kind -> (pattern, handler). A handler takes the engine and the match and
 # returns the statement's DataFrame, a text to run in its place, or None to
 # run the text as written (e.g. an ALTER TABLE form _alter_table declines).
-# Handler-less kinds run natively; the TIME registry follows them.
 _KINDS: dict[str, tuple[re.Pattern, object]] = {
     "explain": (_EXPLAIN_RE, lambda e, m: e._explain_statement(m[1], m[2])),
     "update": (_UPDATE_RE,
@@ -3980,13 +3949,8 @@ _KINDS: dict[str, tuple[re.Pattern, object]] = {
     "restore": (_RESTORE_RE, Engine._restore_table),
     # plain CREATE TABLE (cols): HeavyDB type names + postfix arrays ->
     # Spark DDL types, per column def so names like `time` and DEFAULT
-    # literals survive; declared-TIME columns register after the
-    # statement succeeds (Engine._time_registry_sync)
-    "create_table": (_CREATE_PLAIN_RE, lambda e, m: m["head"] + ", ".join(
-        _rewrite_column_def(d) for d in _split_top_level_defs(m["defs"])
-    ) + m["tail"]),
-    "create_table_native": (_CREATE_TABLE_RE, None),
-    "drop_table": (_DROP_TABLE_RE, None),
+    # literals survive; TIME columns are recorded in TBLPROPERTIES
+    "create_table": (_CREATE_PLAIN_RE, lambda e, m: _create_table_sql(m)),
     # INSERT ... VALUES coerces every cell to its target column type like
     # the reference importer (Importer.cpp); INSERT ... SELECT coerces
     # the source projection (reference ITAS cast semantics)
@@ -4016,10 +3980,9 @@ _HEADS: dict[str, tuple[bool, tuple[str, ...]]] = {
     "INSERT": (False, ("insert_values", "insert_select")),
     "CREATE": (False, ("create_temp_as", "create_with", "create_model",
                        "access_control", "create_server", "create_foreign",
-                       "create_dataframe", "create_table",
-                       "create_table_native")),
+                       "create_dataframe", "create_table")),
     "DROP": (False, ("drop_model", "access_control", "drop_server",
-                     "drop_foreign", "drop_table")),
+                     "drop_foreign")),
     "ALTER": (False, ("access_control", "alter_server", "alter_system_clear",
                       "alter_system_queue", "alter_database_rename",
                       "alter_session", "alter_table")),
@@ -4036,13 +3999,12 @@ _HEADS: dict[str, tuple[bool, tuple[str, ...]]] = {
     "RESTORE": (False, ("restore",)),
 }
 # kinds that act on the raw text, before CURSOR / no-argument table
-# functions expand; every other kind sees the expanded text
+# functions expand; every other kind sees the expanded text. CREATE MODEL
+# keeps its training query for EVALUATE MODEL, so it must keep the raw
+# text: the views an expansion registers go when the statement ends.
 _BEFORE_TABLE_FUNCTIONS = frozenset({
     "explain", "update", "delete", "create_temp_as", "create_with",
-    "show_create", "show_details", "optimize", "validate",
-})
-_CREATE_TABLE_KINDS = frozenset({
-    "create_temp_as", "create_with", "create_table", "create_table_native",
+    "show_create", "show_details", "optimize", "validate", "create_model",
 })
 # a WITH-headed statement may still mutate through its body
 _MUTATING_BODY_RE = re.compile(r"\b(INSERT|UPDATE|DELETE|MERGE)\b",

@@ -4,21 +4,17 @@ Reference: UPDATE/DELETE rewritten to offset-producing projections with
 a storage writeback (RelAlgExecutor.cpp:2163 executeUpdate, :2327
 executeDelete; StorageIOFacility.h:105,205; delete via hidden $deleted
 column). Spark has no in-place mutation on parquet; the equivalent is
-copy-on-write — compute the post-image declaratively, atomically swap
-the table directory (what Delta/Iceberg formalize with metadata instead
-of directory swap).
+copy-on-write — compute the post-image declaratively, then install it
+(what Delta/Iceberg formalize with metadata).
 
 `update_projection` / `delete_filter` give the post-image as a
-DataFrame (pure, testable, oracle-checkable); `apply_*_cow` persist it.
+DataFrame (pure, testable, oracle-checkable); `Engine._replace`
+installs it.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -61,44 +57,6 @@ def delete_filter(df: DataFrame, cond: Column) -> DataFrame:
     (filtered out), so coalesce the predicate to FALSE first.
     """
     return df.filter(~F.coalesce(cond, F.lit(False)))
-
-
-def _atomic_swap(tmp_dir: str, table_dir: str) -> None:
-    old = table_dir + ".old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(table_dir, old)
-    os.rename(tmp_dir, table_dir)
-    shutil.rmtree(old)
-
-
-def apply_update_cow(
-    spark: SparkSession,
-    table_dir: str,
-    cond: Column,
-    assignments: dict[str, Column],
-) -> None:
-    """Copy-on-write UPDATE on a parquet directory table.
-
-    At scale: partition-prune first — only rewrite files whose row
-    groups can match `cond`; untouched partitions are hard-linked, not
-    copied. (Here: full rewrite, the semantics baseline.)
-    """
-    df = spark.read.parquet(table_dir)
-    post = update_projection(df, cond, assignments)
-    tmp = tempfile.mkdtemp(prefix="cow_", dir=os.path.dirname(table_dir))
-    post.write.mode("overwrite").parquet(tmp)
-    _atomic_swap(tmp, table_dir)
-
-
-def apply_delete_cow(
-    spark: SparkSession, table_dir: str, cond: Column
-) -> None:
-    df = spark.read.parquet(table_dir)
-    post = delete_filter(df, cond)
-    tmp = tempfile.mkdtemp(prefix="cow_", dir=os.path.dirname(table_dir))
-    post.write.mode("overwrite").parquet(tmp)
-    _atomic_swap(tmp, table_dir)
 
 
 def update_from(

@@ -4,8 +4,6 @@
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,26 +15,24 @@ from tests.conftest import SF_DIR
 
 @pytest.fixture()
 def scratch_table(spark):
-    d = tempfile.mkdtemp(prefix="dml_")
-    table_dir = os.path.join(d, "orders")
-    spark.read.parquet(f"{SF_DIR}/orders.parquet").write.parquet(table_dir)
-    yield table_dir
-    shutil.rmtree(d, ignore_errors=True)
+    name = "dml_orders"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.read.parquet(f"{SF_DIR}/orders.parquet").write.saveAsTable(name)
+    yield name
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_update_cow(spark, scratch_table):
-    before = spark.read.parquet(scratch_table)
+def test_update_cow(spark, engine, scratch_table):
+    before = spark.table(scratch_table)
     n_before = before.count()
     n_target = before.filter(F.col("o_totalprice") > 300000).count()
     assert n_target > 0
 
-    mutation.apply_update_cow(
-        spark,
-        scratch_table,
-        F.col("o_totalprice") > 300000,
-        {"o_orderpriority": F.lit("X-UPDATED")},
+    engine.sql(
+        f"UPDATE {scratch_table} SET o_orderpriority = 'X-UPDATED' "
+        "WHERE o_totalprice > 300000"
     )
-    after = spark.read.parquet(scratch_table)
+    after = spark.table(scratch_table)
     assert after.count() == n_before
     assert after.filter(F.col("o_orderpriority") == "X-UPDATED").count() == n_target
     # untouched rows keep original values
@@ -49,12 +45,12 @@ def test_update_cow(spark, scratch_table):
     )
 
 
-def test_delete_cow(spark, scratch_table):
-    before = spark.read.parquet(scratch_table)
+def test_delete_cow(spark, engine, scratch_table):
+    before = spark.table(scratch_table)
     n_before = before.count()
     n_del = before.filter(F.col("o_orderstatus") == "F").count()
-    mutation.apply_delete_cow(spark, scratch_table, F.col("o_orderstatus") == "F")
-    after = spark.read.parquet(scratch_table)
+    engine.sql(f"DELETE FROM {scratch_table} WHERE o_orderstatus = 'F'")
+    after = spark.table(scratch_table)
     assert after.count() == n_before - n_del
     assert after.filter(F.col("o_orderstatus") == "F").count() == 0
 
@@ -613,6 +609,36 @@ def test_show_functions_and_table_functions(engine):
     with _pytest.raises(ValueError, match="not registered"):
         engine.sql("SHOW TABLE FUNCTIONS DETAILS nope_tf")
     assert engine.sql("SHOW RUNTIME FUNCTIONS").count() == len(fns)
+
+
+def test_show_functions_lists_every_declared_function(engine):
+    """SHOW FUNCTIONS lists the declaration table, including the
+    declared functions that shadow a Spark builtin of the same name
+    (`SHOW USER FUNCTIONS` leaves those out)."""
+    from heavydb_spark.functions import FUNCTIONS
+
+    fns = [r["name"] for r in engine.sql("SHOW FUNCTIONS").collect()]
+    assert fns == sorted(FUNCTIONS)
+    assert {"url_encode", "url_decode", "st_asbinary"} <= set(fns)
+    d = engine.sql("SHOW FUNCTIONS DETAILS url_encode").first()
+    assert d["name"] == "url_encode" and d["CPU"] is True
+
+
+def test_table_function_views_are_dropped(engine, spark):
+    """The temp views a CURSOR-form or no-argument table function
+    registers are dropped once the statement has run; the statement's
+    DataFrame still collects."""
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    cur = engine.sql(
+        "SELECT * FROM TABLE(tf_compute_dwell_times(CURSOR("
+        "SELECT event_id AS entity_id, event_type AS site_id, ts "
+        "FROM events)))")
+    noarg = engine.sql("SELECT * FROM TABLE(supported_ml_frameworks())")
+    assert temp_views() == before
+    assert cur.collect() and noarg.collect()
 
 
 def test_show_model_details_family(engine):
@@ -1511,6 +1537,74 @@ def test_alter_add_column_time_default(spark, engine):
         spark.sql("DROP TABLE IF EXISTS add_time")
 
 
+def test_time_columns_shared_across_engines(spark, engine):
+    """A declared TIME column lives in the table's own catalog entry,
+    so every Engine on the session reads it: one created through one
+    Engine parses '01:02:03' to seconds-of-day when another Engine
+    writes it, by INSERT VALUES and by load_table, and the other
+    Engine's SHOW CREATE TABLE prints TIME."""
+    from heavydb_spark.engine import Engine
+
+    other = Engine(spark)
+    spark.sql("DROP TABLE IF EXISTS time_shared")
+    engine.sql("CREATE TABLE time_shared (t TIME, i INT)")
+    try:
+        other.sql("INSERT INTO time_shared VALUES ('01:02:03', 1)")
+        other.load_table("time_shared", [("01:02:03", 2)])
+        vals = {r.i: r.t for r in spark.table("time_shared").collect()}
+        assert vals == {1: 3723, 2: 3723}
+        ddl = other.sql("SHOW CREATE TABLE time_shared").first()[0]
+        assert "t TIME" in ddl
+    finally:
+        spark.sql("DROP TABLE IF EXISTS time_shared")
+
+
+def test_time_columns_survive_rewrites_and_with_options(spark, engine,
+                                                        monkeypatch):
+    """CREATE ... WITH records TIME columns next to its options without
+    either overwriting the other, and a table rewrite keeps them even
+    when the best-effort metadata copy after the swap does nothing."""
+    from heavydb_spark.engine import Engine
+
+    spark.sql("DROP TABLE IF EXISTS time_with")
+    engine.sql("CREATE TABLE time_with (t TIME, ta TIME[], i INT) "
+               "WITH (fragment_size = 10, time = 'i')")
+    try:
+        props = {r.key: r.value for r in
+                 spark.sql("SHOW TBLPROPERTIES time_with").collect()}
+        assert props["heavydb.time"] == "i"
+        monkeypatch.setattr(Engine, "_copy_table_metadata",
+                            lambda self, src, dst: None)
+        engine.sql("INSERT INTO time_with VALUES "
+                   "('00:00:10', {'00:00:01'}, 1)")
+        engine.sql("UPDATE time_with SET i = 2")
+        engine.sql("DELETE FROM time_with WHERE i = 3")
+        engine.sql("INSERT INTO time_with VALUES "
+                   "('00:01:00', {'00:00:02'}, 4)")
+        rows = {r.i: (r.t, r.ta) for r in
+                spark.table("time_with").collect()}
+        assert rows == {2: (10, [1]), 4: (60, [2])}
+        ddl = engine.sql("SHOW CREATE TABLE time_with").first()[0]
+        assert "t TIME" in ddl and "i INTEGER" in ddl
+    finally:
+        spark.sql("DROP TABLE IF EXISTS time_with")
+
+
+def test_alter_temp_view_add_time_column_raises(spark, engine):
+    """A temp view has no catalog entry to record a TIME column in, so
+    ALTER TABLE <view> ADD COLUMN x TIME raises and leaves the view as
+    it was."""
+    spark.range(2).createOrReplaceTempView("time_view")
+    try:
+        with pytest.raises(ValueError, match="temporary view"):
+            engine.sql("ALTER TABLE time_view ADD COLUMN x TIME")
+        assert spark.table("time_view").columns == ["id"]
+        engine.sql("ALTER TABLE time_view ADD COLUMN y INT DEFAULT 7")
+        assert [r.y for r in spark.table("time_view").collect()] == [7, 7]
+    finally:
+        spark.catalog.dropTempView("time_view")
+
+
 def test_load_table_typed_error_surfaces(spark, engine):
     """r12 advice: purely typed rows that fail createDataFrame (a
     float supplied for an int column) must RE-RAISE the typed-path
@@ -1610,8 +1704,8 @@ _CLASSIFY_CASES = [
     ("CREATE TABLE t (a INT) WITH (fragment_size=10)", "create_with", False),
     ("CREATE TABLE t (a INT, b TIME)", "create_table", False),
     ("CREATE TEMPORARY TABLE t (a INT)", "create_table", False),
-    ("CREATE TABLE t AS SELECT 1 AS a", "create_table_native", False),
-    ("CREATE OR REPLACE TABLE t (a INT)", "create_table_native", False),
+    ("CREATE TABLE t AS SELECT 1 AS a", "native", False),
+    ("CREATE OR REPLACE TABLE t (a INT)", "native", False),
     ("SHOW CREATE TABLE t", "show_create", True),
     ("SHOW TABLE DETAILS t", "show_details", True),
     ("OPTIMIZE TABLE t", "optimize", False),
@@ -1658,7 +1752,7 @@ _CLASSIFY_CASES = [
     ("COPY t FROM 'x.csv'", "copy_from", False),
     ("DUMP TABLE t TO 'd'", "dump", False),
     ("RESTORE TABLE t FROM 'd'", "restore", False),
-    ("DROP TABLE IF EXISTS t", "drop_table", False),
+    ("DROP TABLE IF EXISTS t", "native", False),
     ("INSERT INTO t VALUES (1, 'a')", "insert_values", False),
     ("INSERT INTO t (a) SELECT a FROM u", "insert_select", False),
     ("SHOW TABLES", "native", True),

@@ -3365,3 +3365,23 @@ def test_similarity_degenerate_input_guards(spark):
         feats, "k", "feat", "metric", {10: 2.0}
     ).collect()
     assert len(got) == 2  # both keys score against the query
+
+
+def test_builders_do_not_resolve_inside_a_lambda(spark):
+    """The H3 and transform builders call SQL functions that
+    register_all creates, and Spark passes no lambda variable to a SQL
+    function: inside an F.transform lambda they fail analysis with
+    MISSING_ATTRIBUTES, as functions._call documents."""
+    from pyspark.errors import AnalysisException
+
+    from heavydb_spark.functions import geo
+    from heavydb_spark.functions import h3 as H
+
+    df = spark.createDataFrame(
+        [([(9.5, 47.0), (9.6, 47.1)],)],
+        "ring array<struct<x: double, y: double>>",
+    )
+    for build in (lambda p: geo.st_transform(p, 4326, 32633),
+                  lambda p: H.h3_lonlat_to_cell(p["x"], p["y"], 5)):
+        with pytest.raises(AnalysisException, match="MISSING_ATTRIBUTES"):
+            df.select(F.transform("ring", build)).collect()
